@@ -28,7 +28,8 @@ object JobProbe {
     case class J(id: Int, desc: String, start: Long, var end: Long = 0L,
                  var stages: Int = 0, var tasks: Int = 0)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    var record = false
+    // written on this thread, read on the listener-bus thread
+    @volatile var record = false
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = if (record) {
         val d = Option(e.properties)

@@ -22,9 +22,10 @@ object PlanAudit {
     val exec = args.contains("--exec")
     val queryArgs = args.filterNot(_ == "--exec")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       // defensive: lets a nanos-encoded events regeneration scan as
       // LongType; Tables.normalizeTs dispatches on whatever arrives

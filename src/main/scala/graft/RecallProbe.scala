@@ -87,8 +87,7 @@ object RecallProbe {
       exact: Set[(Long, Long)]): Seq[(String, Long, Long)] = {
     val m = 8; val ksub = 16; val dsub = Dim / m
     // int8 quantized codes, exactly embeddingQuantize's formula
-    val qd: Array[(Long, Array[Long])] = spark.read
-      .parquet(s"$dir/embeddings.parquet")
+    val qd: Array[(Long, Array[Long])] = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .collect().map { r =>
         val v = r.getSeq[Double](1).toArray

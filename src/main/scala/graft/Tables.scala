@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftGlue, SparkSession}
 
 /** Parquet table loaders for the harness testdata (TESTDATA.md).
   *
@@ -12,7 +12,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema is read from a parquet footer on the driver
+    * ([[org.apache.spark.sql.GraftGlue.parquetFooterSchema]]) and handed
+    * to the reader, so opening a table submits no Spark job. Where the
+    * footer route cannot match Spark's inference (schema merging on, a
+    * glob, a missing path), Spark infers as before. Nothing is kept
+    * between calls: an append or rewrite shows on the next open.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    GraftGlue.parquetFooterSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
 
   /** Normalize an `events`-shaped frame so `ts` is a session-time
     * TIMESTAMP regardless of how the parquet writer encoded it. The

@@ -99,7 +99,7 @@ object DocStreams {
     val lostToIndex: DataFrame =
       if (!idxExists) Seq.empty[Long].toDF("doc_id")
       else bands
-        .join(spark.read.parquet(indexPath).withColumnRenamed("doc_id", "seen_id"),
+        .join(Tables.parquet(spark, indexPath).withColumnRenamed("doc_id", "seen_id"),
           Seq("band", "band_hash"))
         .filter(col("seen_id") < col("doc_id"))
         .select(col("doc_id"))
@@ -195,7 +195,7 @@ object DocStreams {
     val hPath = new org.apache.hadoop.fs.Path(indexPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hPath)) Seq.empty[(String, Long)].toDF("g", "seen_first")
-    else spark.read.parquet(indexPath).toDF("g", "seen_first")
+    else Tables.parquet(spark, indexPath).toDF("g", "seen_first")
   }
 
   private def noveltyScore(batch: DataFrame, grams: DataFrame,

@@ -46,7 +46,7 @@ object EventStreams {
     */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val rawSchema = Tables.parquet(spark, s"$dir/events.parquet").schema
     Tables.normalizeTs(
       spark.readStream
         .schema(rawSchema)
