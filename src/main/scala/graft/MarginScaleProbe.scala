@@ -98,8 +98,8 @@ object MarginScaleProbe {
     })
     def leg(dir: String): (Double, Double, Long) = {
       def once(): (Double, Double, Long) = {
-        operators.Similarity.clearLshSigCache()
-        operators.Similarity.clearCorpusCountCache()
+        operators.Similarity.lshSigMemo.clear()
+        operators.Similarity.corpusCountMemo.clear()
         org.apache.spark.GraftSparkGlue.drainListenerBus(spark.sparkContext)
         val s0 = shuffleBytes.get
         val t0 = System.nanoTime()

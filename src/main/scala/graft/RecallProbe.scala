@@ -203,9 +203,11 @@ object RecallProbe {
             s""""possible":$possible,"recall":${hits.toDouble / possible}}""" + "\n")
         }
       spark.catalog.clearCache()
-      operators.Similarity.clearLshSigCache()
-      operators.Similarity.clearCentroidCache()
-      operators.Similarity.clearCorpusCountCache()
+      operators.Similarity.lshSigMemo.clear()
+      operators.Similarity.centroidMemo.clear()
+      operators.Similarity.sphCentroidMemo.clear()
+      operators.Similarity.pqSampleMemo.clear()
+      operators.Similarity.corpusCountMemo.clear()
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get("RECALL.json"), out.toString)
     print(out)

@@ -182,21 +182,21 @@ object ScaleProbe {
     // (outDir's replicas are written once, above), so per-leg band
     // widths can never cross-contaminate.
     val busters: Map[String, () => Unit] = Map(
-      "bpe_train" -> (() => operators.TextOps.clearBpeCaches()),
+      "bpe_train" -> (() => operators.TextOps.bpeMemo.clear()),
       // stream_novelty memoizes its standing gram index + prior-batch
       // scores per (app, dir); the probe times the full cold lifecycle
-      "stream_novelty" -> (() => streaming.DocStreams.clearNoveltyCaches()),
+      "stream_novelty" -> (() => streaming.DocStreams.noveltyMemo.clear()),
       // the LSH-consumer probes keep paying the cold signature pass
       // per timed run (the family memoizes it per corpus since r18):
       // these rows measure banding + collision scale shape, so the
       // corpus scan must stay ON the measured path — the trained-
       // codebook memo inside ann_recall deliberately rides instead
       // (model-state lens, documented in SCALE.json)
-      "bitext_mine_ann" -> (() => operators.Similarity.clearLshSigCache()),
-      "contrastive_pairs" -> (() => operators.Similarity.clearLshSigCache()),
+      "bitext_mine_ann" -> (() => operators.Similarity.lshSigMemo.clear()),
+      "contrastive_pairs" -> (() => operators.Similarity.lshSigMemo.clear()),
       "contrastive_pairs_scaled_bands" ->
-        (() => operators.Similarity.clearLshSigCache()),
-      "ann_recall" -> (() => operators.Similarity.clearLshSigCache()))
+        (() => operators.Similarity.lshSigMemo.clear()),
+      "ann_recall" -> (() => operators.Similarity.lshSigMemo.clear()))
 
     val results = probes.filter(p => only.isEmpty || only(p._1)).map { case (name, fn) =>
       // warm once at base so neither measurement pays first-codegen;

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{SessionMemo, Tables}
 
 /** Deduplication operators over the `documents` table — the core of an
   * LLM-training-data pipeline.
@@ -639,21 +639,17 @@ object Dedup {
     out
   }
 
-  private val cutCache =
-    scala.collection.concurrent.TrieMap[(String, String), Long]()
+  private val cutMemo = new SessionMemo[Unit, Long]
 
   /** The 80% ingest cut as a driver literal, one `max(doc_id)` scan
-    * per (application, corpus) — cached under the same immutable-dir
-    * contract as [[graft.operators.Similarity]]'s corpus-count cache
-    * (a corpus version is a frozen dir; appends land as NEW dirs).
-    * −1 on an empty corpus.
+    * per corpus version ([[graft.SessionMemo]]). −1 on an empty corpus.
     */
   private def corpusCut(spark: SparkSession, dir: String): Long =
-    cutCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    cutMemo.getOrBuild(spark, dir, ()) {
       val r = Tables.documentsSpread(spark, dir)
         .agg(expr("max(doc_id) * 80 div 100")).head()
       if (r.isNullAt(0)) -1L else r.getLong(0)
-    })
+    }
 
   /** Session-standing corpus-side signature state for the ingest fold,
     * built ONCE per (application, corpus) and persisted as bucketed

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{SessionMemo, Tables}
 
 /** Similarity search over the `embeddings` table (`embedding
   * ARRAY<FLOAT>`).
@@ -1258,55 +1258,26 @@ object Similarity {
     * DuckDB oracle replays the WHOLE pipeline including both Lloyd
     * rounds.
     */
-  private val centroidCache = scala.collection.concurrent.TrieMap[
-    (String, String, Int), Seq[(Long, Seq[Double])]]()
-  private val centroidKeyLocks = scala.collection.concurrent.TrieMap[
-    (String, String, Int), Object]()
-  private val sphCentroidCache = scala.collection.concurrent.TrieMap[
-    (String, String, Int), Seq[(Long, Seq[Double])]]()
-  private val sphCentroidKeyLocks = scala.collection.concurrent.TrieMap[
-    (String, String, Int), Object]()
-  private val pqSampleCache = scala.collection.concurrent.TrieMap[
-    (String, String, Int), Seq[(Long, Seq[Double])]]()
-  private val pqSampleKeyLocks = scala.collection.concurrent.TrieMap[
-    (String, String, Int), Object]()
-
-  /** Drop all memoized k-means codebooks — the probe/test hook, same
-    * contract as the corpus-count cache's [[clearCorpusCountCache]].
-    */
-  private[graft] def clearCentroidCache(): Unit = {
-    centroidCache.clear()
-    centroidKeyLocks.clear()
-    sphCentroidCache.clear()
-    sphCentroidKeyLocks.clear()
-    pqSampleCache.clear()
-    pqSampleKeyLocks.clear()
-  }
+  private[graft] val centroidMemo = new SessionMemo[Int, Seq[(Long, Seq[Double])]]
+  private[graft] val sphCentroidMemo = new SessionMemo[Int, Seq[(Long, Seq[Double])]]
+  private[graft] val pqSampleMemo = new SessionMemo[Int, Seq[(Long, Seq[Double])]]
 
   /** The PQ codebook sample — the `ksub` lowest (vec_id, q) rows by
     * md5(vec_id), re-sorted by vec_id — memoized per (application,
-    * corpus, ksub) under the same model-state contract as
-    * [[sphericalCentroids]]: the draw is fully deterministic, so the
-    * memo can only change who pays the sort+limit collect (previously
-    * one collect job per [[annPq]]/[[annIvfPq]] CALL — four inside
-    * each recall scoreboard).
+    * corpus, ksub) in a [[graft.SessionMemo]]: the draw is fully
+    * deterministic, so the memo can only change who pays the
+    * sort+limit collect (previously one collect job per
+    * [[annPq]]/[[annIvfPq]] CALL — four inside each recall
+    * scoreboard).
     */
   private def pqSample(spark: SparkSession, dir: String,
-      ksub: Int): Seq[(Long, Seq[Double])] = {
-    val key = (spark.sparkContext.applicationId, dir, ksub)
-    pqSampleCache.get(key) match {
-      case Some(v) => v
-      case None =>
-        pqSampleKeyLocks.getOrElseUpdate(key, new Object).synchronized {
-          pqSampleCache.getOrElseUpdate(key,
-            quantizedCodes(spark, dir)
-              .orderBy(md5(col("vec_id").cast("string").cast("binary")), col("vec_id"))
-              .limit(ksub)
-              .select(col("vec_id"), col("q")).collect().toSeq
-              .sortBy(_.getLong(0)).map(r => (r.getLong(0), r.getSeq[Double](1))))
-        }
-    }
-  }
+      ksub: Int): Seq[(Long, Seq[Double])] =
+    pqSampleMemo.getOrBuild(spark, dir, ksub)(
+      quantizedCodes(spark, dir)
+        .orderBy(md5(col("vec_id").cast("string").cast("binary")), col("vec_id"))
+        .limit(ksub)
+        .select(col("vec_id"), col("q")).collect().toSeq
+        .sortBy(_.getLong(0)).map(r => (r.getLong(0), r.getSeq[Double](1))))
 
   /** One SPHERICAL Lloyd assign→update round: rank by
     * `dot(q, c) / ‖c‖` (cosine up to the row's own norm, which is
@@ -1355,9 +1326,9 @@ object Similarity {
 
   /** The IVF family's trained coarse codebook: two SPHERICAL Lloyd
     * rounds ([[assignUpdateCos]]) from the deterministic first-`k`
-    * init, per (application, corpus, k), memoized with the same
-    * per-key double-checked locking as [[finalCentroids]]. Spherical
-    * (cosine-assignment) training is the right metric for a COSINE
+    * init, per (application, corpus, k), memoized like
+    * [[finalCentroids]]. Spherical (cosine-assignment) training is
+    * the right metric for a COSINE
     * ANN index: the L2 trainer in quantized space pulls centroids
     * toward the data mean, and routing a cosine query through
     * L2-trained cells measurably LOST recall on the registered corpus
@@ -1371,52 +1342,33 @@ object Similarity {
     * within-label cosine ≈ 0) can show parity at best.
     */
   private[graft] def sphericalCentroids(spark: SparkSession, dir: String,
-      k: Int): Seq[(Long, Seq[Double])] = {
-    val key = (spark.sparkContext.applicationId, dir, k)
-    sphCentroidCache.get(key) match {
-      case Some(v) => v
-      case None =>
-        sphCentroidKeyLocks.getOrElseUpdate(key, new Object).synchronized {
-          sphCentroidCache.getOrElseUpdate(key, {
-            val qd = quantizedCodes(spark, dir)
-            val init = initCents(qd, k)
-            if (init.isEmpty) Seq.empty
-            else centsOf(assignUpdateCos(qd, centsOf(assignUpdateCos(qd, init))))
-          })
-        }
+      k: Int): Seq[(Long, Seq[Double])] =
+    sphCentroidMemo.getOrBuild(spark, dir, k) {
+      val qd = quantizedCodes(spark, dir)
+      val init = initCents(qd, k)
+      if (init.isEmpty) Seq.empty
+      else centsOf(assignUpdateCos(qd, centsOf(assignUpdateCos(qd, init))))
     }
-  }
 
   /** The two-round Lloyd codebook per (application, corpus, k),
     * memoized: the centroids are MODEL state (k·dim integer codes, a
     * few KB on the driver — no DataFrame lifecycle to manage), and
     * every consumer that buckets the corpus by them (semantic dedup,
     * prototype pruning, cluster labeling) re-derives the identical
-    * seq. One training per session under the immutable-corpus-dir
-    * contract ([[corpusBandBits]]); consumers still run their own
-    * final assignment scan against the cached literal. Per-key
-    * double-checked locking (the `unigramStateShared` pattern) keeps
-    * concurrent first callers — dedup_semantic / prototype_prune /
-    * cluster_top_terms in a parallel sweep — from each running the
-    * corpus-scale Lloyd rounds redundantly, while different
-    * (corpus, k) keys still train in parallel.
+    * seq. One training per corpus version ([[graft.SessionMemo]]);
+    * consumers still run their own final assignment scan against the
+    * cached literal. Concurrent first callers — dedup_semantic /
+    * prototype_prune / cluster_top_terms in a parallel sweep — share
+    * one run of the corpus-scale Lloyd rounds.
     */
   private def finalCentroids(spark: SparkSession, dir: String,
-      k: Int): Seq[(Long, Seq[Double])] = {
-    val key = (spark.sparkContext.applicationId, dir, k)
-    centroidCache.get(key) match {
-      case Some(v) => v
-      case None =>
-        centroidKeyLocks.getOrElseUpdate(key, new Object).synchronized {
-          centroidCache.getOrElseUpdate(key, {
-            val qd = quantizedCodes(spark, dir)
-            val init = initCents(qd, k)
-            if (init.isEmpty) Seq.empty
-            else centsOf(assignUpdate(qd, centsOf(assignUpdate(qd, init))))
-          })
-        }
+      k: Int): Seq[(Long, Seq[Double])] =
+    centroidMemo.getOrBuild(spark, dir, k) {
+      val qd = quantizedCodes(spark, dir)
+      val init = initCents(qd, k)
+      if (init.isEmpty) Seq.empty
+      else centsOf(assignUpdate(qd, centsOf(assignUpdate(qd, init))))
     }
-  }
 
   def dedupSemantic(spark: SparkSession, dir: String, k: Int = 64,
       threshold: Double = 0.35): DataFrame = {
@@ -1902,12 +1854,10 @@ object Similarity {
   }
 
   /** [[derivedNlist]] over the corpus cardinality — shares
-    * [[corpusBandBits]]'s memoized count and immutable-dir contract.
+    * [[corpusBandBits]]'s memoized count.
     */
   private[graft] def corpusNlist(spark: SparkSession, dir: String): Int =
-    derivedNlist(corpusCountCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      Tables.embeddings(spark, dir).count()))
+    derivedNlist(corpusCount(spark, dir))
 
   /** The IVF family's knob resolution: explicit values (specs, stress
     * probes) pass through; the 0 sentinel derives from cardinality.
@@ -1915,34 +1865,20 @@ object Similarity {
   private def resolveNlist(spark: SparkSession, dir: String, nlist: Int): Int =
     if (nlist > 0) nlist else corpusNlist(spark, dir)
 
-  private val corpusCountCache =
-    scala.collection.concurrent.TrieMap[(String, String), Long]()
+  private[graft] val corpusCountMemo = new SessionMemo[Unit, Long]
 
-  /** Drop all memoized corpus counts — for harnesses (ScaleProbe) that
-    * rewrite a corpus dir inside one application and need the banding
-    * re-derived. Production reads never need this (see the
-    * immutable-dir assumption on [[corpusBandBits]]).
+  /** The embeddings count, one count() per corpus version
+    * ([[graft.SessionMemo]]): the scan is columnar count pushdown
+    * (parquet row-group metadata), the cost CBO stats would also pay
+    * once.
     */
-  private[graft] def clearCorpusCountCache(): Unit = corpusCountCache.clear()
+  private def corpusCount(spark: SparkSession, dir: String): Long =
+    corpusCountMemo.getOrBuild(spark, dir, ())(
+      Tables.embeddings(spark, dir).count())
 
-  /** [[derivedBandBits]] over the corpus cardinality — one count()
-    * per (application, corpus), cached: the scan is columnar count
-    * pushdown (parquet row-group metadata), the cost CBO stats would
-    * also pay once.
-    *
-    * ASSUMES the corpus dir is immutable for the application lifetime
-    * (the lakehouse contract this whole library reads under: a corpus
-    * version is a frozen dir; appends land as NEW dirs that the
-    * standing-index `*Append` ops fold in). Rewriting `dir` in place
-    * mid-application would leave the cached count — and therefore the
-    * derived band width — stale, diverging from the oracle's live
-    * recount; a harness that must do that calls
-    * [[clearCorpusCountCache]] between legs.
-    */
+  /** [[derivedBandBits]] over the memoized corpus cardinality. */
   private[graft] def corpusBandBits(spark: SparkSession, dir: String): Int =
-    derivedBandBits(corpusCountCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      Tables.embeddings(spark, dir).count()))
+    derivedBandBits(corpusCount(spark, dir))
 
   /** Banded random-hyperplane LSH signatures for the whole corpus:
     * one row per (vector, band) with the band's `bandBits`-bit slice of
@@ -1972,31 +1908,7 @@ object Similarity {
     * per-row sign-bit pass (nBands·bandBits dot products) feeds every
     * band stream, so it is computed once and persisted pre-explode.
     */
-  private val lshSigCache = scala.collection.concurrent.TrieMap[
-    (String, String, Int, Int, Int), DataFrame]()
-  private val lshSigLocks = scala.collection.concurrent.TrieMap[
-    (String, String, Int, Int, Int), Object]()
-
-  /** Drop the memoized LSH signature frames — the probe/test hook of
-    * the family's session caches (same contract as
-    * [[clearCorpusCountCache]] / [[clearCentroidCache]]). The frames
-    * are EAGER localCheckpoints, so clearing the map alone would
-    * orphan corpus-scale checkpoint blocks in the block manager until
-    * GC/ContextCleaner happens to run — during exactly the
-    * measurements ScaleProbe's per-run clears exist to isolate;
-    * each frame's backing RDD is unpersisted explicitly first.
-    */
-  private[graft] def clearLshSigCache(): Unit = {
-    lshSigCache.values.foreach { df =>
-      org.apache.spark.sql.GraftGlue.analyzed(df) match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
-    }
-    lshSigCache.clear()
-    lshSigLocks.clear()
-  }
+  private[graft] val lshSigMemo = new SessionMemo[(Int, Int, Int), DataFrame]
 
   private[graft] def lshBands(spark: SparkSession, dir: String,
                               nBits0: Int = 0, bandBits0: Int = 0, dim: Int = 64): DataFrame = {
@@ -2016,17 +1928,9 @@ object Similarity {
     // [[lshSigStandingTable]] materializes this same frame as a
     // versioned bucketed parquet table with a batch-shaped append
     // lifecycle (registered `similarity_ann_lsh_standing`/`_append`);
-    // the memo remains the in-session fast path fronting it, under
-    // the immutable-corpus-dir contract ([[corpusBandBits]]).
-    val key = (spark.sparkContext.applicationId, dir, nBits0, bandBits0, dim)
-    val sig = lshSigCache.get(key) match {
-      case Some(s) => s
-      case None =>
-        lshSigLocks.getOrElseUpdate(key, new Object).synchronized {
-          lshSigCache.getOrElseUpdate(key,
-            lshSigPlan(spark, dir, nBands, bandBits, dim).localCheckpoint(true))
-        }
-    }
+    // the memo remains the in-session fast path fronting it.
+    val sig = lshSigMemo.getOrBuild(spark, dir, (nBits0, bandBits0, dim))(
+      lshSigPlan(spark, dir, nBands, bandBits, dim).localCheckpoint(true))
     explodeSigBands(sig, nBands)
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionMemo, Tables}
 
 /** Text-analysis operators over the `documents` table.
   *
@@ -533,25 +533,8 @@ object TextOps {
   def bpeTrain(spark: SparkSession, dir: String, rounds: Int = 3): Seq[(Int, String, String, Long)] =
     bpeTrainStateShared(spark, dir, rounds)._1
 
-  private val bpeStateCache =
-    scala.collection.concurrent.TrieMap[(String, String, Int),
-      (Seq[(Int, String, String, Long)], DataFrame)]()
-  private val bpeKeyLocks =
-    scala.collection.concurrent.TrieMap[(String, String, Int), Object]()
-
-  /** Drop every memoized training snapshot (unpersisting the
-    * checkpointed word tables so their blocks free immediately) — for
-    * harnesses (ScaleProbe) that must time a COLD training loop per
-    * leg; production sessions never call this (a corpus dir is
-    * immutable for the application lifetime, the same contract as
-    * Similarity's corpus-count cache).
-    */
-  private[graft] def clearBpeCaches(): Unit = {
-    bpeStateCache.values.foreach(v =>
-      try v._2.unpersist() catch { case _: Throwable => () })
-    bpeStateCache.clear()
-    bpeKeyLocks.clear()
-  }
+  private[graft] val bpeMemo =
+    new SessionMemo[Int, (Seq[(Int, String, String, Long)], DataFrame)]
 
   /** [[bpeTrainState]] memoized per (application, corpus, rounds): the
     * merge sequence is driver state; the final word table is snapshot
@@ -560,32 +543,16 @@ object TextOps {
     * can't invalidate it) and the loop's persist handle is released
     * here, so no caller leaks a MEMORY_AND_DISK entry and the three
     * consumers ([[bpeTrain]], [[bpeTrainTable]], [[bpeVocab]]) really
-    * do share ONE training loop, as the scaladoc always promised.
-    *
-    * Locking is per key, so concurrent FIRST calls on different
-    * corpora train in parallel; only same-key racers wait for the one
-    * shared loop. Durability caveat (this container runs local mode,
-    * where it cannot bite): localCheckpoint is not fault-tolerant — in
-    * cluster mode an executor loss would poison the snapshot, and a
-    * deployment would either re-key through [[clearBpeCaches]] on
-    * block-fetch failure or use a reliable checkpoint dir instead.
+    * do share ONE training loop ([[graft.SessionMemo]]).
     */
   private def bpeTrainStateShared(spark: SparkSession, dir: String,
-      rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
-    val key = (spark.sparkContext.applicationId, dir, rounds)
-    bpeStateCache.get(key) match {
-      case Some(v) => v
-      case None =>
-        bpeKeyLocks.getOrElseUpdate(key, new Object).synchronized {
-          bpeStateCache.getOrElseUpdate(key, {
-            val (merges, words) = bpeTrainState(spark, dir, rounds)
-            val snap = words.localCheckpoint(true)
-            words.unpersist()
-            (merges, snap)
-          })
-        }
+      rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) =
+    bpeMemo.getOrBuild(spark, dir, rounds) {
+      val (merges, words) = bpeTrainState(spark, dir, rounds)
+      val snap = words.localCheckpoint(true)
+      words.unpersist()
+      (merges, snap)
     }
-  }
 
   /** [[bpeTrain]] plus the post-training vocabulary state: the merge
     * sequence AND the final (syms, wcnt) word table (persisted — the
@@ -833,51 +800,24 @@ object TextOps {
     * over 255 chars are excluded from training (the key encoding's
     * low byte; SentencePiece's max-length cut plays the same role).
     */
-  private val unigramStateCache =
-    scala.collection.concurrent.TrieMap[(String, String, Int, Int, Int),
-      (DataFrame, DataFrame)]()
-  private val unigramKeyLocks =
-    scala.collection.concurrent.TrieMap[(String, String, Int, Int, Int), Object]()
+  private[graft] val unigramMemo =
+    new SessionMemo[(Int, Int, Int), (DataFrame, DataFrame)]
 
-  /** Drop all memoized unigram training state — the probe/test hook,
-    * same contract as [[clearBpeCaches]].
-    */
-  private[graft] def clearUnigramCaches(): Unit = {
-    unigramStateCache.values.foreach { case (v, s) =>
-      try { v.unpersist(); s.unpersist() } catch { case _: Throwable => () }
-    }
-    unigramStateCache.clear()
-    unigramKeyLocks.clear()
-  }
-
-  /** [[unigramState]] memoized per (application, corpus, params) — the
-    * session-scoped model-state pattern [[bpeTrainStateShared]] set:
-    * one EM loop per corpus, the final vocab and segmentation pinned
-    * as eager localCheckpoints, the intermediate occurrence cache
-    * released. Per-key locks, so first calls on different corpora
-    * train in parallel. Same durability caveat as the BPE cache:
-    * localCheckpoint is not fault-tolerant; a cluster deployment
-    * re-keys through [[clearUnigramCaches]] on block-fetch failure or
-    * uses a reliable checkpoint dir.
+  /** [[unigramState]] memoized per (application, corpus, params) in a
+    * [[graft.SessionMemo]], like [[bpeTrainStateShared]]: one EM loop
+    * per corpus, the final vocab and segmentation pinned as eager
+    * localCheckpoints, the intermediate occurrence cache released.
     */
   private def unigramStateShared(spark: SparkSession, dir: String,
-      vMulti: Int, maxPieceLen: Int, rounds: Int): (DataFrame, DataFrame) = {
-    val key = (spark.sparkContext.applicationId, dir, vMulti, maxPieceLen, rounds)
-    unigramStateCache.get(key) match {
-      case Some(v) => v
-      case None =>
-        unigramKeyLocks.getOrElseUpdate(key, new Object).synchronized {
-          unigramStateCache.getOrElseUpdate(key, {
-            val (vocab, seg, occ) =
-              unigramState(spark, dir, vMulti, maxPieceLen, rounds)
-            val vs = vocab.localCheckpoint(true)
-            val ss = seg.localCheckpoint(true)
-            occ.unpersist()
-            (vs, ss)
-          })
-        }
+      vMulti: Int, maxPieceLen: Int, rounds: Int): (DataFrame, DataFrame) =
+    unigramMemo.getOrBuild(spark, dir, (vMulti, maxPieceLen, rounds)) {
+      val (vocab, seg, occ) =
+        unigramState(spark, dir, vMulti, maxPieceLen, rounds)
+      val vs = vocab.localCheckpoint(true)
+      val ss = seg.localCheckpoint(true)
+      occ.unpersist()
+      (vs, ss)
     }
-  }
 
   private def unigramState(spark: SparkSession, dir: String,
       vMulti: Int, maxPieceLen: Int, rounds: Int): (DataFrame, DataFrame, DataFrame) = {

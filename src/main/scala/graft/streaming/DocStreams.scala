@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.operators.{Dedup, TextOps}
 
 /** Streaming near-duplicate filtering over the `documents` stream —
@@ -235,22 +235,8 @@ object DocStreams {
     * localCheckpoint'd before the append mutates the index its plan
     * read.
     */
-  private val noveltyStateCache =
-    scala.collection.concurrent.TrieMap[(String, String, Int, Int),
-      (String, Seq[DataFrame], Long)]()
-
-  /** Drop the memoized standing novelty state — for harnesses
-    * (ScaleProbe) that must time a COLD lifecycle per leg; production
-    * sessions never call this (a corpus dir is immutable for the
-    * application lifetime, the same contract as the BPE and
-    * corpus-count caches).
-    */
-  private[graft] def clearNoveltyCaches(): Unit = {
-    noveltyStateCache.values.foreach { case (_, outs, _) =>
-      outs.foreach(o => try o.unpersist() catch { case _: Throwable => () })
-    }
-    noveltyStateCache.clear()
-  }
+  private[graft] val noveltyMemo =
+    new SessionMemo[(Int, Int), (String, Seq[DataFrame], Long)]
 
   def streamNovelty(spark: SparkSession, dir: String,
       nBatches: Int = 4, n: Int = 8): DataFrame = {
@@ -279,18 +265,17 @@ object DocStreams {
       val maxId = maxRow.getLong(0)
       def batchOf(b: Int, mx: Long): DataFrame = docs.filter(
         expr(s"doc_id * $nBatches div ${mx + 1}") === lit(b.toLong))
-      val key = (spark.sparkContext.applicationId, dir, nBatches, n)
       val (idxPath, priorOuts, builtMaxId) =
-        noveltyStateCache.getOrElseUpdate(key, {
+        noveltyMemo.getOrBuild(spark, dir, (nBatches, n)) {
           val hPath = new org.apache.hadoop.fs.Path(path)
           val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
           if (fs.exists(hPath)) fs.delete(hPath, true)
           val outs = (0 until nBatches - 1)
             .map(b => noveltyBatchAgainstIndex(batchOf(b, maxId), path, n))
           (path, outs, maxId)
-        })
+        }
       // batch boundaries come from the cut the standing state was
-      // built at (== the live maxId under the immutable-dir contract)
+      // built at (== the live maxId: the memo rebuilds on a changed dir)
       (priorOuts :+
         noveltyScoreAgainstIndex(batchOf(nBatches - 1, builtMaxId), idxPath, n))
         .reduce(_ union _)
