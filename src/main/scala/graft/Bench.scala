@@ -11,6 +11,55 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** `SPARK_GRAFT_CPUS` when set, else every core (as perfbench runs). */
+  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session definition of every main and the test fixture.
+    * Engine confs always apply; the local sizing only when no launcher
+    * (spark-submit) has set `spark.master`. perfbench/run.py parses this
+    * chain's text, so each conf stays a literal `.config(key, value)`.
+    */
+  def builder(cpus: Int): SparkSession.Builder = {
+    val engine = SparkSession.builder()
+      .config("spark.sql.session.timeZone", "UTC")
+      // defensive: lets a nanos-encoded events regeneration scan as
+      // LongType; Tables.normalizeTs dispatches on whatever arrives
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      // let AQE coalesce shuffle partitions UNDER cached plans too
+      // (off by default): the iterative families persist their edge/
+      // label tables, and without this every fixpoint round runs
+      // full-width 32-partition exchanges over batch-sized data —
+      // measured ~25% off the components merge-fold rounds at sf0.1
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // Codegen class cache sized for the whole registry (default 100
+      // entries): a 284-query sweep generates ~10k codegen sources, so
+      // at the default size every query's classes are EVICTED between
+      // its sweep-1 and sweep-2 runs and each timed run re-pays its
+      // Janino compilation — measured 2.1s for minhash_error_profile
+      // against a 1.25s steady-state wall, which is exactly the
+      // "codegen oscillation" class (same code, bytes unmoved, wall
+      // flipping 1.25↔3.2s across records: the flip was the eviction
+      // state, r19 pin via PlanAudit --exec's compile readout). With the
+      // registry's classes resident, the recorded min measures the
+      // query, not the compiler — the steady-state figure a deployment
+      // re-running a pipeline sees.
+      .config("spark.sql.codegen.cache.maxEntries", "20000")
+    if (sys.props.contains("spark.master")) engine
+    else engine
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+  }
+
+  /** [[builder]]'s session, logging at WARN. */
+  def session(cpus: Int): SparkSession = {
+    val spark = builder(cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** PIDs of java processes that are neither this JVM, its ancestors
     * (the sbt launcher), nor its descendants — i.e. a co-resident
     * Verify/test JVM whose compile or GC activity would contaminate
@@ -91,35 +140,8 @@ object Bench {
       System.err.println(s"[bench] CONTENDED: JVM(s) ${contended.mkString(",")} " +
         "still running — timings in this output are not trend-comparable")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // let AQE coalesce shuffle partitions UNDER cached plans too
-      // (off by default): the iterative families persist their edge/
-      // label tables, and without this every fixpoint round runs
-      // full-width 32-partition exchanges over batch-sized data —
-      // measured ~25% off the components merge-fold rounds at sf0.1
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Codegen class cache sized for the whole registry (default 100
-      // entries): a 284-query sweep generates ~10k codegen sources, so
-      // at the default size every query's classes are EVICTED between
-      // its sweep-1 and sweep-2 runs and each timed run re-pays its
-      // Janino compilation — measured 2.1s for minhash_error_profile
-      // against a 1.25s steady-state wall, which is exactly the
-      // "codegen oscillation" class (same code, bytes unmoved, wall
-      // flipping 1.25↔3.2s across records: the flip was the eviction
-      // state, r19 pin via PlanAudit --exec's compile readout). With the
-      // registry's classes resident, the recorded min measures the
-      // query, not the compiler — the steady-state figure a deployment
-      // re-running a pipeline sees.
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = envCpus
+    val spark = session(cpus)
 
     // Warm the session once (FS/committer init, first codegen, executor
     // spin-up) so per-query timings measure the query, not JVM startup —
@@ -270,7 +292,7 @@ object Bench {
         Seq("-cp", System.getProperty("java.class.path"), "graft.Bench", "--stream-only")
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
       // child stderr → parent stderr (progress visible, no pipe to drain)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val p = pb.start()

@@ -8,13 +8,10 @@ import graft.functions._
 
 /** SQL-surface registration of the graft native expressions.
   *
-  * Config-time (new sessions):
-  * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
-  * after which `SELECT simhash64(tokens), minhash_bands(sh, 64, 4) ...`
-  * parse like built-ins. [[GraftExtensions.register]] installs the same
+  * Config-time (new sessions): `spark.sql.extensions` set to
+  * `graft.GraftExtensions`, as [[Bench.builder]] does, after which
+  * `SELECT simhash64(tokens), minhash_bands(sh, 64, 4) ...` parse like
+  * built-ins. [[GraftExtensions.register]] installs the same
   * builders on an already-running session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

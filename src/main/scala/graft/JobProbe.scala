@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Diagnostic: run named queries twice (cold + warm) and print every
@@ -10,23 +9,25 @@ import org.apache.spark.scheduler._
   * Run: sbt "runMain graft.JobProbe <query> [query...]"
   */
 object JobProbe {
+
+  /** Length of the union of `(start, end)` intervals: the time spent
+    * inside at least one job, counting overlapping and nested jobs once.
+    */
+  def unionMs(intervals: Seq[(Long, Long)]): Long = {
+    var total = 0L
+    var coveredTo = Long.MinValue
+    intervals.sortBy(_._1).foreach { case (start, end) =>
+      val from = start.max(coveredTo)
+      if (end > from) { total += end - from; coveredTo = end }
+    }
+    total
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.envCpus)
 
-    case class J(id: Int, desc: String, start: Long, var end: Long = 0L,
-                 var stages: Int = 0, var tasks: Int = 0)
+    case class J(id: Int, desc: String, start: Long, stages: Int, var end: Long = 0L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
     // written on this thread, read on the listener-bus thread
     @volatile var record = false
@@ -36,12 +37,11 @@ object JobProbe {
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .filter(_.nonEmpty)
           .getOrElse(e.stageInfos.map(_.name.takeWhile(_ != '(')).distinct.mkString("|"))
-        jobs.put(e.jobId, J(e.jobId, d, e.time, stages = e.stageIds.size))
+        jobs.put(e.jobId, J(e.jobId, d, e.time, e.stageIds.size))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = if (record) {
         Option(jobs.get(e.jobId)).foreach(_.end = e.time)
       }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = ()
     })
 
     args.foreach { name =>
@@ -64,16 +64,17 @@ object JobProbe {
       record = false
       spark.catalog.clearCache()
       import scala.jdk.CollectionConverters._
-      val js = jobs.values.asScala.toSeq.sortBy(_.id)
+      val js = jobs.values.asScala.toSeq.sortBy(j => (j.start, j.id))
       println(f"\n===== $name: cold $cold%.2f s, warm $warm%.2f s, ${js.size} jobs =====")
-      var prevEnd = 0L
+      // AQE jobs overlap: each gap runs from the latest end seen so far
+      var latestEnd = js.headOption.fold(0L)(_.start)
       js.foreach { j =>
-        val gap = if (prevEnd == 0) 0.0 else (j.start - prevEnd) / 1e3
-        prevEnd = j.end
+        val gap = (j.start - latestEnd).max(0L) / 1e3
+        latestEnd = latestEnd.max(j.end)
         println(f"  job ${j.id}%3d ${(j.end - j.start) / 1e3}%7.3f s  gap ${gap}%6.3f s  stages=${j.stages}%2d  ${j.desc.take(90)}")
       }
-      val jobSum = js.map(j => (j.end - j.start) / 1e3).sum
-      println(f"  job wall sum ${jobSum}%.2f s; gaps (driver-only) ${warm - jobSum}%.2f s")
+      val union = unionMs(js.map(j => (j.start, j.end))) / 1e3
+      println(f"  job interval union ${union}%.2f s; driver-only ${warm - union}%.2f s")
     }
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for every registered query — the
   * "is this the plan you'd want at 100 TB" review loop.
   * Run: sbt "runMain graft.PlanAudit [queryName...]"
@@ -22,18 +20,7 @@ object PlanAudit {
     val exec = args.contains("--exec")
     val queryArgs = args.filterNot(_ == "--exec")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // defensive: lets a nanos-encoded events regeneration scan as
-      // LongType; Tables.normalizeTs dispatches on whatever arrives
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(Bench.envCpus)
     val names = if (queryArgs.nonEmpty) queryArgs.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

@@ -43,20 +43,7 @@ object ScaleProbe {
     // replica dirs are reused when already present, so a single-probe
     // re-leg costs seconds, not the full build+sweep
     val only: Set[String] = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // registry-sized codegen class cache (the Bench fix): evictions
-      // would re-pay Janino compiles inside timed probe runs
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.envCpus)
 
     def span(df: DataFrame, k: String): Long = df.agg(max(col(k))).head.getLong(0) + 1L
 

@@ -1,7 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
 
 /** Command-line entrypoint mirroring the reference's per-task jar
   * invocation (reference README.md:96-145 — `hadoop jar
@@ -67,20 +66,8 @@ object TaskRunner {
     val name = resolve(task).getOrElse(
       throw new IllegalArgumentException(s"unknown task '$task'\n$usage"))
 
-    // Under spark-submit the master comes from the launcher; bare
-    // `runMain` falls back to all-core local mode.
-    val builder = SparkSession.builder()
-      .appName(s"graft-$name")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    val spark =
-      (if (sys.props.contains("spark.master")) builder
-       else builder.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "*")}]")
-         .config("spark.sql.shuffle.partitions",
-           sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-        .getOrCreate()
+    // under spark-submit the master and sizing come from the launcher
+    val spark = Bench.builder(Bench.envCpus).appName(s"graft-$name").getOrCreate()
 
     val result = SparkEntry.queries(name)(spark, tableDir)
     format match {

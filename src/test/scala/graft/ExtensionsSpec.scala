@@ -43,8 +43,17 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
     assert(z.getLong(2) === viaColumn)
   }
 
+  test("the fixture session carries the graft extensions from config time") {
+    // a new session keeps the config-time extensions but none of the
+    // runtime registrations that suites make on the shared session
+    val fresh = spark.newSession()
+    assert(fresh.sql(
+      "SELECT simhash64(array('p','q')) = simhash64(array('q','p'))").head().getBoolean(0))
+    assert(fresh.sessionState.optimizer.batches
+      .exists(_.rules.contains(graft.plans.TokenRewrite)))
+  }
+
   test("EditDistanceJoinRewrite: naive levenshtein join becomes a blocked equi-join") {
-    GraftExtensions.register(spark)
     val sess = spark
     import sess.implicits._
     // short strings, empty string, NULL, and a duplicate row — every
@@ -104,7 +113,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("JaroWinklerThresholdRewrite: jw threshold predicates fuse into the gte kernel") {
-    GraftExtensions.register(spark)
     val sess = spark
     import sess.implicits._
     val base = "the quick brown fox jumps over the lazy dog then naps"
@@ -167,7 +175,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("the similarity rewrites compose: lev bound blocks, jw bound fuses as residual") {
-    GraftExtensions.register(spark)
     val sess = spark
     import sess.implicits._
     val base = "a reasonably long similarity fixture string for both"
@@ -208,7 +215,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("jaro_winkler matches the published vectors and DuckDB's conventions") {
-    GraftExtensions.register(spark)
     def jw(a: String, b: String): Double = spark.sql(
       s"SELECT jaro_winkler('$a', '$b')").collect().head.getDouble(0)
     // classic Winkler vectors, values pinned from DuckDB's
@@ -229,7 +235,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("damerau_levenshtein is the FULL variant, DuckDB-pinned") {
-    GraftExtensions.register(spark)
     def dl(a: String, b: String): Long = spark.sql(
       s"SELECT damerau_levenshtein('$a', '$b')").collect().head.getLong(0)
     // the OSA discriminator: full DL may edit between transposed chars
@@ -244,7 +249,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("mg_candidates UDAF: SQL heavy-hitter candidates cover every frequent token") {
-    GraftExtensions.register(spark)
     Sql.registerAll(spark, fixtureDir)
     val cand = spark.sql(
       """SELECT mg_candidates(token) AS c
@@ -257,8 +261,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("null array elements are skipped, never NPE (public SQL surface)") {
-    GraftExtensions.register(spark)
-
     // each kernel ignores NULL elements: result equals the null-free call
     val r = spark.sql(
       """SELECT simhash64(array('a', CAST(NULL AS STRING), 'b')) = simhash64(array('a','b')) AS sh_eq,
@@ -276,7 +278,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("wrong arity / bad band config raise named plan-time errors") {
-    GraftExtensions.register(spark)
     val e1 = intercept[Exception](spark.sql("SELECT simhash64()").collect())
     assert(e1.getMessage.contains("simhash64"))
     val e2 = intercept[Exception](spark.sql("SELECT sorted_intersect_count(array(1L))").collect())
@@ -290,7 +291,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("TokenRewrite rewrites user-written split+filter to ws_tokens") {
-    GraftExtensions.register(spark)
     // non-foldable input (a parquet scan): literals/VALUES would be
     // constant-folded into a LocalRelation before extension rules run
     Tables.documents(spark, fixtureDir).createOrReplaceTempView("docs_tv")
@@ -309,7 +309,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("SQL results agree with the Column-API expressions") {
-    GraftExtensions.register(spark)
     import org.apache.spark.sql.functions.col
     val viaSql = spark.sql("SELECT simhash64(array('alpha','beta','gamma')) AS s")
       .collect().head.getLong(0)
@@ -324,7 +323,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("SimJoinParallelize size gate: stats decide, absent/stale stats fail safe") {
-    GraftExtensions.register(spark)
     import org.apache.spark.sql.functions.{col, expr}
     def hasRoundRobin(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.exists {

@@ -136,18 +136,31 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
     assert((nlist0, nlist1) === ((16, 32)))
   }
 
-  test("no TrieMap under src/main/scala outside SessionMemo.scala") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root))
-    val walk = java.nio.file.Files.walk(root)
-    val offenders =
+  /** `.scala` files under `roots`, other than the file named `allowed`,
+    * whose text matches `pattern`.
+    */
+  private def filesMatching(pattern: String, allowed: String, roots: String*): List[String] =
+    roots.toList.flatMap { r =>
+      val root = java.nio.file.Paths.get(r)
+      assert(java.nio.file.Files.isDirectory(root))
+      val walk = java.nio.file.Files.walk(root)
       try walk.iterator.asScala
-        .filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "SessionMemo.scala")
-        .filter(p => java.nio.file.Files.readString(p).contains("TrieMap"))
+        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != allowed)
+        .filter(p => pattern.r.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
         .map(_.toString).toList
       finally walk.close()
+    }
+
+  test("no TrieMap under src/main/scala outside SessionMemo.scala") {
+    val offenders = filesMatching("TrieMap", "SessionMemo.scala", "src/main/scala")
     assert(offenders.isEmpty,
       "memoize model state through graft.SessionMemo, not a per-operator TrieMap")
+  }
+
+  test("no session builder under src/ outside Bench.scala") {
+    val offenders = filesMatching("""SparkSession\.builder\(\)""", "Bench.scala",
+      "src/main/scala", "src/test/scala")
+    assert(offenders.isEmpty,
+      s"build sessions through graft.Bench.builder/session, not by hand: $offenders")
   }
 }

@@ -10,19 +10,12 @@ import org.scalatest.Suite
   */
 trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
+  lazy val spark: SparkSession = Bench.builder(4)
     // deliberately NOT scratchDir: the session (and its warehouse of
     // bucketed catalog tables) is shared across suites — the first
     // suite's afterAll must not delete it out from under the rest
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   lazy val fixtureDir: String = {
