@@ -71,7 +71,8 @@ object DocStreams {
 
   /** The `foreachBatch` body: probe one micro-batch of documents
     * against the standing band index at `indexPath`, return the kept
-    * rows, and append the batch's band keys to the index.
+    * rows, and append the batch's band keys to the index. The kept rows
+    * come back persisted; the caller unpersists them once written.
     *
     * A batch doc survives iff no index entry with a strictly earlier
     * doc_id claims one of its buckets AND it wins first-writer-wins
@@ -128,8 +129,9 @@ object DocStreams {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        dedupBatchAgainstIndex(batch, indexPath)
-          .write.mode("append").parquet(outPath)
+        val kept = dedupBatchAgainstIndex(batch, indexPath)
+        try kept.write.mode("append").parquet(outPath)
+        finally kept.unpersist()
       }
 
   private def gramExpr(n: Int): String =

@@ -342,17 +342,23 @@ object EventStreams {
     * (window × event_type), not anything coarser: update mode emits
     * only CHANGED aggregate rows, and a coarser partition would drop
     * its unchanged siblings on overwrite.
+    *
+    * The write is the micro-batch's single action. A `foreachBatch`
+    * frame is a view over the stateful plan, so every action on it
+    * re-runs the state-store stage; the write is what runs it once and
+    * commits the epoch's state version. Empty batches (the no-data
+    * batch after the watermark advances among them) are therefore
+    * written, never skipped: zero rows under dynamic overwrite touch no
+    * partition. Dynamic mode is a per-write option, so the session's
+    * `partitionOverwriteMode` is left as the caller set it.
     */
-  def mergeWindowCounts(batch: DataFrame, outDir: String): Unit = {
-    if (batch.isEmpty) return
-    batch.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+  def mergeWindowCounts(batch: DataFrame, outDir: String): Unit =
     batch
       .withColumn("w_start_us", expr("unix_micros(w_start)"))
       .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("w_start_us", "event_type")
       .parquet(outDir)
-  }
 
   /** Streaming writer wiring for [[mergeWindowCounts]]: windowed counts
     * in update mode, each micro-batch merged idempotently.

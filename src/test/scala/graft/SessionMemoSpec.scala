@@ -163,4 +163,27 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
     assert(offenders.isEmpty,
       s"build sessions through graft.Bench.builder/session, not by hand: $offenders")
   }
+
+  /** The `conf.set` calls allowed under src/main/scala, by (file, key).
+    * An operator that sets a session conf changes every later query of
+    * its caller; a per-read or per-write option does not.
+    */
+  private val allowedConfSets: Map[(String, String), String] = {
+    val nanos = "defensive: a nanos-encoded events regeneration scans as LongType " +
+      "instead of failing; every session already carries the same value"
+    Seq("Tables.scala", "EventStreams.scala", "Bench.scala")
+      .map(f => (f, "spark.sql.legacy.parquet.nanosAsLong") -> nanos).toMap
+  }
+
+  test("no session conf.set under src/main/scala outside the allow-list") {
+    val confSet = """conf\s*\.set\(\s*(?:"([^"]*)")?"""
+    val offenders = filesMatching(confSet, "", "src/main/scala").flatMap { f =>
+      val p = java.nio.file.Paths.get(f)
+      confSet.r.findAllMatchIn(java.nio.file.Files.readString(p))
+        .map(m => (p.getFileName.toString, Option(m.group(1)).getOrElse("<non-literal key>")))
+        .filterNot(allowedConfSets.contains)
+    }
+    assert(offenders.isEmpty,
+      s"pass a per-read or per-write option instead of setting the session conf: $offenders")
+  }
 }

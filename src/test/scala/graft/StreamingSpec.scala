@@ -2,8 +2,11 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQueryProgress}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.{CumCount, Ev}
@@ -541,9 +544,13 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("foreachBatch upsert sink is idempotent under batch replay") {
-    val s = spark
+    // a fresh session, so no earlier suite's setting can hide a change
+    // to the session's overwrite mode
+    val s = spark.newSession()
     import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
+    implicit val sqlCtx = s.sqlContext
+    val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+    val mode = s.conf.getOption(overwriteMode)
     val outDir = scratchDir("graft-upsert")
     val chk = scratchDir("graft-upsert-chk")
     val in = MemoryStream[Ev]
@@ -554,6 +561,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       // second batch UPDATES the same 10:00 window (update mode)
       in.addData(ev(2, ts(10, 59), 1))
       q.processAllAvailable()
+      assert(s.conf.getOption(overwriteMode) === mode)
       val table = spark.read.parquet(outDir)
       val r = table.collect()
       assert(r.length === 1) // one (window, type) aggregate row, not three
@@ -565,9 +573,147 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         Seq(ev(0, ts(10, 5), 1), ev(1, ts(10, 40), 2), ev(2, ts(10, 59), 1)).toDF())
       EventStreams.mergeWindowCounts(replay, outDir)
       EventStreams.mergeWindowCounts(replay, outDir) // twice
+      assert(s.conf.getOption(overwriteMode) === mode)
       val after = spark.read.parquet(outDir).collect()
       assert(after.length === 1)
       assert(after.head.getAs[Long]("cnt") === 3L)
     } finally q.stop()
+  }
+
+  /** Runs `body` with a listener that counts the jobs of each (query,
+    * micro-batch), read off the local properties the engine sets on
+    * every job a batch submits. `body` gets the drained counts of one
+    * query, by batch id.
+    */
+  private def withJobsPerBatch[T](body: (java.util.UUID => Map[Long, Int]) => T): T = {
+    val counts = scala.collection.mutable.Map.empty[(String, Long), Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties);
+             q <- Option(p.getProperty("sql.streaming.queryId"));
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          counts.synchronized(counts((q, b.toLong)) = counts.getOrElse((q, b.toLong), 0) + 1)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try body { id =>
+      assert(org.apache.spark.GraftSparkGlue.drainListenerBus(sc))
+      counts.synchronized(counts.toMap.collect { case ((q, b), n) if q == id.toString => b -> n })
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The micro-batches `q` has run (idle progress events carry no
+    * `addBatch` time), once `done` holds of them; fails after 60 s.
+    * Progress is posted after the batch commits, so it can lag
+    * `processAllAvailable`.
+    */
+  private def batchesRun(q: StreamingQuery)(
+      done: Seq[StreamingQueryProgress] => Boolean): Seq[StreamingQueryProgress] = {
+    def ran = q.recentProgress.toSeq.filter(_.durationMs.containsKey("addBatch"))
+    val deadline = System.nanoTime + 60L * 1000000000L
+    while (!done(ran) && System.nanoTime < deadline) Thread.sleep(50)
+    val ps = ran
+    assert(done(ps), s"(batch id, input rows): ${ps.map(p => p.batchId -> p.numInputRows)}")
+    ps
+  }
+
+  /** All `rows` consumed, then a batch with no input: the no-data batch
+    * that evicts state behind an advanced watermark.
+    */
+  private def drained(rows: Long)(ps: Seq[StreamingQueryProgress]): Boolean =
+    ps.map(_.numInputRows).sum == rows && ps.lastOption.exists(_.numInputRows == 0)
+
+  private def windowCounts(dir: String): Map[(Timestamp, String), Long] =
+    spark.read.parquet(dir).collect()
+      .map(r => (r.getAs[Timestamp]("w_start"), r.getAs[String]("event_type")) ->
+        r.getAs[Long]("cnt")).toMap
+
+  test("upsertWindowCounts runs one job per micro-batch, the no-data batch included") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val outDir = scratchDir("graft-upsert")
+    val in = MemoryStream[Ev]
+    withJobsPerBatch { jobsOf =>
+      val q = EventStreams.upsertWindowCounts(in.toDF(), outDir,
+        scratchDir("graft-upsert-chk")).start()
+      try {
+        // 2 changed aggregate rows: (10:00, view) and (10:00, click)
+        in.addData(ev(0, ts(10, 5), 1), ev(1, ts(10, 40), 2, "click"), ev(2, ts(10, 50), 1))
+        q.processAllAvailable()
+        // 2 more: (13:00, view) and (10:00, view) again. The 13:30 event
+        // moves the watermark to 11:30, so a no-data batch follows.
+        in.addData(ev(3, ts(13, 30), 1), ev(4, ts(10, 59), 2))
+        val ran = batchesRun(q)(drained(5))
+        val jobs = jobsOf(q.id)
+        assert(jobs.keySet === ran.map(_.batchId).toSet)
+        assert(jobs.values.forall(_ == 1), s"jobs per batch id: $jobs")
+        // each batch ran the state stage once: updates are counted once
+        assert(ran.map(_.stateOperators.head.numRowsUpdated).sum === 4L)
+        assert(windowCounts(outDir) === Map(
+          (ts(10), "view") -> 3L, (ts(10), "click") -> 1L, (ts(13), "view") -> 1L))
+      } finally q.stop()
+    }
+  }
+
+  /** Every file under `dir`, by relative path, with its bytes. */
+  private def tableBytes(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> java.nio.file.Files.readAllBytes(p).toSeq)
+      .toMap
+    finally walk.close()
+  }
+
+  test("an all-late micro-batch leaves the table byte-identical and commits its state") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val outDir = scratchDir("graft-upsert")
+    val in = MemoryStream[Ev]
+    withJobsPerBatch { jobsOf =>
+      val q = EventStreams.upsertWindowCounts(in.toDF(), outDir,
+        scratchDir("graft-upsert-chk")).start()
+      try {
+        in.addData(ev(0, ts(10, 5), 1), ev(1, ts(13, 30), 1)) // watermark → 11:30
+        batchesRun(q)(drained(2))
+        val written = tableBytes(outDir)
+        // both windows end at or before the 11:30 watermark: every row is
+        // dropped and the batch writes zero rows
+        in.addData(ev(2, ts(9, 0), 2), ev(3, ts(10, 30), 2))
+        val late = batchesRun(q)(_.map(_.numInputRows).sum == 4).last
+        assert(late.numInputRows === 2L)
+        assert(late.stateOperators.head.numRowsDroppedByWatermark === 2L)
+        assert(tableBytes(outDir) === written)
+        // the next batch loads the state version the late batch committed
+        in.addData(ev(4, ts(13, 45), 2))
+        val ran = batchesRun(q)(drained(5))
+        assert(windowCounts(outDir) === Map(
+          (ts(10), "view") -> 1L, (ts(13), "view") -> 2L))
+        val jobs = jobsOf(q.id)
+        assert(jobs.keySet === ran.map(_.batchId).toSet)
+        assert(jobs.values.forall(_ == 1), s"jobs per batch id: $jobs")
+      } finally q.stop()
+    }
+  }
+
+  test("upsertDedupDocs leaves no persisted RDD behind per micro-batch") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val tmp = scratchDir("graft-docstream")
+    val before = persisted
+    val in = MemoryStream[(Long, String)]
+    val q = graft.streaming.DocStreams.upsertDedupDocs(
+      in.toDF().toDF("doc_id", "text"), s"$tmp/idx", s"$tmp/out", s"$tmp/chk").start()
+    try (0 until 3).foreach { i =>
+      // no token shared across documents: every one is kept
+      in.addData((i.toLong, (0 until 8).map(j => s"d${i}w$j").mkString(" ")))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(spark.read.parquet(s"$tmp/out").count() === 3L)
+    assert(persisted -- before === Set.empty[Int])
   }
 }
