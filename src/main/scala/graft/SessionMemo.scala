@@ -88,7 +88,10 @@ object SessionMemo {
     files.result().sorted
   }
 
-  private def release(v: Any): Unit = v match {
+  /** Frees every `LogicalRDD` leaf of each `DataFrame` in `v` — the
+    * way to drop an eager `localCheckpoint`.
+    */
+  private[graft] def release(v: Any): Unit = v match {
     case ds: Dataset[_] =>
       GraftGlue.analyzed(ds.asInstanceOf[DataFrame]).foreach {
         case l: LogicalRDD => l.rdd.unpersist(blocking = false)

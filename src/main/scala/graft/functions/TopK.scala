@@ -42,7 +42,7 @@ class TopKBySim(k: Int)
   // the buffer is kept sorted best-first, so a candidate that cannot
   // beat the current k-th (the common case on a big scored stream) is
   // rejected in O(1) instead of paying a per-row sort + allocation —
-  // measured as the ScaleProbe 10x hot path of the fold consumers.
+  // measured as the 10x hot path of the fold consumers (SCALE.json, r20).
   // Rejection is exact: `take(k)` would drop exactly those candidates.
   override def reduce(b: Seq[(Double, Long)], a: (Long, Long, Double)): Seq[(Double, Long)] =
     if (b.size >= k && ord.compare((a._3, a._2), b.last) >= 0) b

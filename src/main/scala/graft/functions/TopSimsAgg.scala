@@ -18,8 +18,8 @@ import scala.collection.mutable.ArrayBuffer
   * `groupByKey(...).mapValues(...).agg(aggregator)` plan wraps the
   * whole candidate stream in DeserializeToObject/SerializeFromObject —
   * every input row round-trips through Scala object codecs before the
-  * fold even sees it, which ScaleProbe measured as the dominant 10×
-  * cost of the bitext margin stage (the fold itself is O(1) per
+  * fold even sees it, measured as the dominant 10× cost of the
+  * bitext margin stage in SCALE.json (the fold itself is O(1) per
   * rejected row). A [[TypedImperativeAggregate]] runs inside the
   * ordinary hash-aggregate operator on unsafe rows: update reads two
   * primitive columns, the k-bounded buffer serializes to a few dozen

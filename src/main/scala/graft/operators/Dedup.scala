@@ -430,7 +430,8 @@ object Dedup {
     // prefix-explode → candidate join → verify), and every fixpoint
     // action — one agg per round plus the final checkpoint — re-runs
     // Catalyst analysis/optimization and AQE per-stage re-planning
-    // over that tree. Measured on the r21 steady-state JobProbe:
+    // over that tree. Measured on the r21 steady-state job readout
+    // (now `PlanAudit --exec`):
     // dedup_components_delete spent 3.6 s of its 4.5 s wall in
     // between-job driver gaps, concentrated on the round aggregates
     // whose plans nested the induced-subgraph pipeline. Truncating to
@@ -705,8 +706,8 @@ object Dedup {
   private[graft] def splitTables(spark: SparkSession, dir: String,
       basePct: Int = 80): (DataFrame, DataFrame, DataFrame) = {
     // default 80 = the family's standard 80% cut (max*80 div 100 ==
-    // max*8 div 10, floor-identical); LifecycleProbe sweeps other
-    // fractions to measure fold cost against batch size
+    // max*8 div 10, floor-identical); BucketedJoinSpec's fold spec
+    // sweeps other fractions to pin fold bytes against batch size
     val cut = Tables.documentsSpread(spark, dir)
       .agg(expr(s"max(doc_id) * $basePct div 100").as("c"))
     val shas = Tables.documentsSpread(spark, dir)
@@ -838,10 +839,10 @@ object Dedup {
       // materialization every reference replays the probe joins above.
       // EAGER localCheckpoint rather than persist: the probe-join plan
       // otherwise rides into every downstream action (the merge
-      // fixpoint's per-round aggregates re-plan it — the r21 JobProbe
-      // measured ~2.9 s of driver-only replanning gaps on exactly
-      // those actions), and truncation caps each round's plan at leaf
-      // scans for the same block footprint
+      // fixpoint's per-round aggregates re-plan it — the r21 job
+      // readout (now `PlanAudit --exec`) measured ~2.9 s of driver-only
+      // replanning gaps on exactly those actions), and truncation caps
+      // each round's plan at leaf scans for the same block footprint
       .localCheckpoint(true)
 
     // (3) propagate over the contracted merge graph: vertices are the
@@ -1288,9 +1289,11 @@ object Dedup {
     *  2. COMPACTION: the index rewrites without tombstoned rows under
     *     the SAME `bucketBy(seg_key)` spec (eager checkpoint first —
     *     the overwrite cannot scan the table it replaces).
-    * Returns the post-compaction probe; DedupSpec asserts soft ≡
-    * compacted and that no pair points at a deleted doc. Shares the
-    * incremental oracle with the takedown filter on the standing side.
+    * Returns the post-compaction probe; DedupSpec asserts it equals
+    * the uncompacted probe's pairs minus tombstoned `dup_of`s (the soft
+    * delete's rows) and that no pair points at a deleted doc. Shares
+    * the incremental oracle with the takedown filter on the standing
+    * side.
     */
   def editDistanceStandingDelete(spark: SparkSession, dir: String,
                                  start: Int = 101, width: Int = 48,
@@ -1321,36 +1324,16 @@ object Dedup {
     edProbeAgainst(spark, table, batch, k)
   }
 
-  /** The soft-delete HALF of [[editDistanceStandingDelete]],
-    * standalone for the spec: probe the UNCOMPACTED index with the
-    * tombstone filter — must emit exactly the post-compaction rows.
-    */
-  private[graft] def editDistanceSoftDeleteProbe(
-      spark: SparkSession, dir: String, table: String,
-      start: Int = 101, width: Int = 48, maxDist: Int = 2): DataFrame = {
-    val k = maxDist
-    val cut = Tables.documents(spark, dir)
-      .agg(expr("max(doc_id) * 8 div 10").as("c"))
-    val batch = edWindows(spark, dir, start, width, k)
-      .crossJoin(broadcast(cut))
-      .filter(col("doc_id") > col("c")).drop("c")
-    edProbeAgainst(spark, table, batch, k,
-      idxFilter = Some(col("dup_of") % 10 =!= 5))
-  }
-
   /** Shared probe tail for the standing segment-index variants: batch
     * probe substrings against a named bucketed index table, distinct
     * the candidate pairs, banded-levenshtein verify.
     */
   private def edProbeAgainst(spark: SparkSession, table: String,
-                             batch: DataFrame, k: Int,
-                             idxFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+                             batch: DataFrame, k: Int): DataFrame = {
     val probes = edProbes(batch, k)
       .withColumn("seg_key", concat_ws("#", col("la"), col("i"), col("seg")))
       .select(col("doc_id"), col("s").as("s_b"), col("seg_key"))
-    val idx0 = spark.table(table)
-    val idx = idxFilter.fold(idx0)(idx0.filter)
-    idx.join(probes, "seg_key")
+    spark.table(table).join(probes, "seg_key")
       .select(col("doc_id"), col("dup_of"), col("s_a"), col("s_b"))
       .distinct()
       .withColumn("dist", levenshtein(col("s_b"), col("s_a"), k).cast("long"))
@@ -1982,7 +1965,7 @@ object Dedup {
     * bucketed band index is built, a takedown set (standing docs with
     * doc_id divisible by 10 — a deterministic stand-in for PII/DMCA
     * removals the oracle can replay) is removed in the two production
-    * steps, both run here:
+    * steps (compaction runs here; the oracle replays the soft delete):
     *  1. SOFT delete: an id-scale tombstone list the probe anti-joins
     *     (broadcast at any corpus/tombstone ratio) — effective
     *     immediately, zero index rewrite;
@@ -1993,9 +1976,10 @@ object Dedup {
     *     delete files and compacts lazily — the probe shape is
     *     identical either way.)
     * Returns the post-compaction probe's verified pairs; DedupSpec
-    * asserts the soft-deleted probe emits the identical rows and that
-    * nothing points at a deleted doc. Shares the incremental oracle
-    * with the takedown filter applied on the standing side.
+    * asserts they equal the uncompacted probe's pairs minus tombstoned
+    * `dup_of`s (the soft delete's rows), so nothing points at a
+    * deleted doc. Shares the incremental oracle with the takedown
+    * filter applied on the standing side.
     */
   def minhashStandingDelete(spark: SparkSession, dir: String): DataFrame = {
     val sh = shingleSets(spark, dir).persist(StorageLevel.MEMORY_AND_DISK)
@@ -2032,34 +2016,6 @@ object Dedup {
     val batch = withKey.filter(col("doc_id") > col("c"))
       .select(col("doc_id"), col("band_key"))
     spark.table(table)
-      .join(batch, "band_key")
-      .select(col("doc_id"), col("dup_of"))
-      .distinct()
-      .join(sh.select(col("doc_id"), col("sh").as("shb")), "doc_id")
-      .join(sh.select(col("doc_id").as("dup_of"), col("sh").as("sha")), "dup_of")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))).cast("long"))
-      .withColumn("uni",
-        size(col("sha")).cast("long") + size(col("shb")).cast("long") - col("inter"))
-      .filter(col("inter").cast("double") / col("uni") >= 0.8)
-      .select(col("doc_id"), col("dup_of"), col("inter"), col("uni"))
-  }
-
-  /** The soft-delete HALF of [[minhashStandingDelete]], standalone for
-    * the spec: probe the UNCOMPACTED index with the tombstone anti-join
-    * — must emit exactly the post-compaction rows.
-    */
-  private[graft] def minhashSoftDeleteProbe(
-      spark: SparkSession, dir: String, table: String): DataFrame = {
-    val sh = shingleSets(spark, dir)
-    val cut = Tables.documentsSpread(spark, dir)
-      .agg(expr("max(doc_id) * 8 div 10").as("c"))
-    val batch = md5BandTable(sh)
-      .crossJoin(broadcast(cut))
-      .filter(col("doc_id") > col("c"))
-      .withColumn("band_key", concat_ws("#", col("band"), col("band_hash")))
-      .select(col("doc_id"), col("band_key"))
-    spark.table(table)
-      .filter(col("dup_of") % 10 =!= 0) // the tombstone anti-join, as a filter
       .join(batch, "band_key")
       .select(col("doc_id"), col("dup_of"))
       .distinct()

@@ -107,33 +107,6 @@ object Relational {
         coalesce(col("n_types"), lit(0L)).as("n_types"))
   }
 
-  /** Task E re-expressed with the TYPED cogroup API — the literal Spark
-    * analog of the reference's tagged-union reduce-side cogroup
-    * (reference TaskE.java:64-88: one reducer call sees a key's NAME:
-    * and ACCESS: records together). The declarative join formulation
-    * ([[taskECountDistinct]]) is the production path — Catalyst can't
-    * optimize through this lambda — but the cogroup surface is part of
-    * the engine's API and its equivalence is pinned in RelationalSpec.
-    */
-  def taskECountDistinctCogroup(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val cust = Tables.customer(spark, dir)
-      .select(col("c_custkey"), col("c_name")).as[(Long, String)]
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type")).as[(Long, String)]
-    cust.groupByKey(_._1)
-      .cogroup(ev.groupByKey(_._1)) { (k, cs, es) =>
-        val names = cs.map(_._2).toSeq
-        if (names.isEmpty) Iterator.empty // no NAME: record → dropped (TaskE.java:83)
-        else {
-          val types = es.map(_._2).toSeq
-          names.iterator.map(n =>
-            (k, n, types.size.toLong, types.distinct.size.toLong))
-        }
-      }
-      .toDF("custkey", "name", "total", "n_types")
-  }
-
   /** Task F (reference TaskF.java:95-132): existence anti-join — entities
     * with ≥1 declared pair that never appears in the "accessed" set.
     * Realization: suppliers having some (supplier, part) shipping pair

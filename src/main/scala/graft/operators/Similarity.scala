@@ -945,7 +945,8 @@ object Similarity {
     * vectors with `vec_id % 10 == 3`, excluding the first-`nlist`
     * codebook/query rows — deleting a vector does not retrain the
     * already-shipped codebook, so those ids stay out of the stand-in)
-    * is removed in the two production steps, both run here:
+    * is removed in the two production steps (compaction runs here;
+    * the oracle replays the soft delete):
     *  1. SOFT delete: an id-scale tombstone predicate the probe
     *     applies over the standing table — effective immediately,
     *     zero index-file rewrite, partition pruning untouched
@@ -956,9 +957,10 @@ object Similarity {
     *     deployment writes delete files and compacts lazily — the
     *     probe shape is identical either way.)
     * Returns the post-compaction probe's top-5; SimilaritySpec asserts
-    * the soft-deleted probe emits the identical rows and that no
-    * neighbor is tombstoned. Shares [[annIvf]]'s DuckDB oracle with
-    * the takedown predicate applied on the candidate side.
+    * that no neighbor is tombstoned. Shares [[annIvf]]'s DuckDB oracle
+    * with the takedown predicate applied on the candidate side — the
+    * soft-delete form — so every oracle run checks that compaction
+    * answers exactly like the soft delete.
     */
   def annIvfStandingDelete(spark: SparkSession, dir: String,
                            nlist0: Int = 0, nprobe: Int = 4): DataFrame = {
@@ -993,21 +995,6 @@ object Similarity {
   private def tombstoned(id: Column, nlist: Int): Column =
     id % 10 === 3 && id >= nlist
 
-  /** The soft-delete HALF of [[annIvfStandingDelete]], standalone for
-    * the spec: probe the UNCOMPACTED index with the tombstone filter —
-    * must emit exactly the post-compaction rows.
-    */
-  private[graft] def annIvfSoftDeleteProbe(
-      spark: SparkSession, dir: String, table: String,
-      nlist0: Int = 0, nprobe: Int = 4): DataFrame = {
-    val nlist = resolveNlist(spark, dir, nlist0)
-    val emb = withNorm(spark, dir)
-    val (nCells, cellSims) = ivfCodebook(spark, dir, nlist)
-      .getOrElse(return emptyProbeFrame(spark))
-    ivfProbe(spark, emb, cellSims, nCells, nprobe, table,
-      idxFilter = Some(!tombstoned(col("vec_id"), nlist)))
-  }
-
   /** Shared probe phase for the standing-index variants: nprobe
     * highest-similarity cells per query (ties to the higher cell id —
     * annIvf's reverse-sort rule), probed cell ids collected to the
@@ -1016,8 +1003,7 @@ object Similarity {
     */
   private def ivfProbe(spark: SparkSession, emb: DataFrame,
                        cellSims: (Column, Column) => Column, nCells: Int,
-                       nprobe: Int, table: String,
-                       idxFilter: Option[Column] = None): DataFrame = {
+                       nprobe: Int, table: String): DataFrame = {
     val qProbes = emb.filter(col("vec_id") < 10)
       .withColumn("cs", cellSims(col("v"), col("nrm")))
       .select(
@@ -1032,10 +1018,8 @@ object Similarity {
     val probedCells = qProbes.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
 
-    val idx0 = spark.table(table)
+    val scored = spark.table(table)
       .filter(col("cell").isin(probedCells: _*))
-    val idx = idxFilter.fold(idx0)(idx0.filter)
-    val scored = idx
       .join(broadcast(qProbes), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("sim", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
@@ -1258,9 +1242,9 @@ object Similarity {
     * DuckDB oracle replays the WHOLE pipeline including both Lloyd
     * rounds.
     */
-  private[graft] val centroidMemo = new SessionMemo[Int, Seq[(Long, Seq[Double])]]
-  private[graft] val sphCentroidMemo = new SessionMemo[Int, Seq[(Long, Seq[Double])]]
-  private[graft] val pqSampleMemo = new SessionMemo[Int, Seq[(Long, Seq[Double])]]
+  private val centroidMemo = new SessionMemo[Int, Seq[(Long, Seq[Double])]]
+  private val sphCentroidMemo = new SessionMemo[Int, Seq[(Long, Seq[Double])]]
+  private val pqSampleMemo = new SessionMemo[Int, Seq[(Long, Seq[Double])]]
 
   /** The PQ codebook sample — the `ksub` lowest (vec_id, q) rows by
     * md5(vec_id), re-sorted by vec_id — memoized per (application,
@@ -1626,7 +1610,7 @@ object Similarity {
     * Three r20 rebuilds, all forced by RECALL.json's clustered-corpus
     * collapse (recall 0.26 → 0.02 as N grew — the composed "scale
     * path" was the worst variant exactly where cluster structure
-    * exists). Each was measured on the RecallProbe corpora before
+    * exists). Each was measured on RECALL.json's clustered corpora before
     * landing (a cosine-decomposed ADC was also built and measured
     * WORSE at every codebook — quantization noise in q·r̂ hurts a
     * ratio more than a distance — so the residual-L2 ADC stays):
@@ -1646,8 +1630,9 @@ object Similarity {
     *  3. REFINE stage: exact-cosine re-rank of the ADC top `refineR`
     *     (see the inline comment — PQ codes cannot rank same-cluster
     *     noise alignments; every production IVF-PQ deployment refines).
-    * RecallProbe recall@5 on the clustered corpora, before → after:
-    * N=16k/nlist=64 0.02 → 0.90; N=2k/nlist=16 0.26 → 0.98.
+    * recall@5 on RECALL.json's clustered corpora, before → after:
+    * N=16k/nlist=64 0.02 → 0.90; N=2k/nlist=16 0.26 → 0.98
+    * (AnnCodebookSpec holds the after figures as floors).
     *
     * The coarse codebook is the TRAINED [[sphericalCentroids]] at
     * k = `nlist` (two integer-exact cosine-assignment Lloyd rounds in
@@ -2380,10 +2365,11 @@ object Similarity {
   /** In-plan clustered embedding corpus, written once per
     * (application, dir-scope) under the usual scoped-index contract:
     * 2000 vectors, 12 contiguous (shard-grouped) clusters, queries
-    * 0–9 drawn from clusters 1–10 ([[RecallProbe]]'s convention).
+    * 0–9 drawn from clusters 1–10 (RECALL.json's convention, which
+    * AnnCodebookSpec's recall floors replay).
     * Every coordinate is INTEGER md5 arithmetic — center(cluster, j)
     * in [-1000, 1000] plus noise(id, j) in [-120, 120] (12% relative,
-    * the RecallProbe σ) — so the exact corpus regenerates in DuckDB
+    * RECALL.json's σ) — so the exact corpus regenerates in DuckDB
     * with the `('0x' || substr(md5(...), 1, 7))::BIGINT` idiom every
     * LSH oracle already uses, and floats carry the integers exactly.
     */

@@ -72,7 +72,9 @@ object DocStreams {
   /** The `foreachBatch` body: probe one micro-batch of documents
     * against the standing band index at `indexPath`, return the kept
     * rows, and append the batch's band keys to the index. The kept rows
-    * come back persisted; the caller unpersists them once written.
+    * come back as an eager `localCheckpoint`, so reading them never
+    * re-reads the index; the caller frees them once written
+    * ([[SessionMemo.release]]).
     *
     * A batch doc survives iff no index entry with a strictly earlier
     * doc_id claims one of its buckets AND it wins first-writer-wins
@@ -106,16 +108,12 @@ object DocStreams {
         .select(col("doc_id"))
         .distinct()
 
+    // checkpoint BEFORE the append mutates the index this plan reads: a
+    // cached plan over `indexPath` is invalidated by the append, and the
+    // caller's write would re-run the whole probe join
     val kept = batch.select(col("doc_id"))
       .join(lostWithin(bands).union(lostToIndex), Seq("doc_id"), "left_anti")
-      .persist()
-    // force materialization before the append so the caller normally
-    // reads the cache, not a re-listed index. (Even an eviction-forced
-    // recompute is semantics-identical: post-append, the index probe
-    // additionally sees the batch's OWN band rows, but with the strict
-    // seen_id < doc_id filter those reproduce exactly the in-batch
-    // first-writer losses `lostWithin` already removed.)
-    kept.count()
+      .localCheckpoint(true)
     bands.write.mode("append").parquet(indexPath)
     bands.unpersist()
     kept
@@ -131,7 +129,7 @@ object DocStreams {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val kept = dedupBatchAgainstIndex(batch, indexPath)
         try kept.write.mode("append").parquet(outPath)
-        finally kept.unpersist()
+        finally SessionMemo.release(kept)
       }
 
   private def gramExpr(n: Int): String =

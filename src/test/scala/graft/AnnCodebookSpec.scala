@@ -28,6 +28,10 @@ import graft.operators.Similarity
   * rows 0..15, so each query probed a cell centered on itself. This
   * spec is the measurement that separates that coincidence from
   * genuine routing quality.
+  *
+  * The same corpus, with one query per cluster moved to ids 0–9, also
+  * holds the registered `ann_recall` scoreboard to RECALL.json's
+  * recorded hits at N = 2,000 and 16,000.
   */
 class AnnCodebookSpec extends AnyFunSuite with SparkFixture {
 
@@ -39,30 +43,35 @@ class AnnCodebookSpec extends AnyFunSuite with SparkFixture {
   // first-N init's shard) and none among the init vectors themselves
   private val QueryIds = Seq(450L, 750L, 1000L, 1200L, 1380L, 1500L, 1640L, 1750L, 1840L, 1900L)
 
-  /** Deterministic clustered corpus: unit cluster centers and
-    * per-point Gaussian noise from a fixed-seed java.util.Random (the
-    * LCG + polar-method sequence is specified, so the corpus is
-    * byte-stable across runs and platforms), grouped by cluster id.
+  /** Deterministic clustered corpus at a size multiplier, in cluster
+    * order: unit cluster centers and per-point Gaussian noise from a
+    * fixed-seed java.util.Random (the LCG + polar-method sequence is
+    * specified, so the corpus is byte-stable across runs and
+    * platforms).
     */
-  private lazy val corpusDir: String = {
+  private def clusteredVectors(mult: Int): IndexedSeq[Seq[Float]] = {
+    val sizes = Sizes.map(_ * mult)
     val rng = new java.util.Random(7)
     def unit(v: Array[Double]): Array[Double] = {
       val n = math.sqrt(v.map(x => x * x).sum)
       v.map(_ / n)
     }
-    val centers = Array.fill(Sizes.size)(unit(Array.fill(Dim)(rng.nextGaussian())))
+    val centers = Array.fill(sizes.size)(unit(Array.fill(Dim)(rng.nextGaussian())))
     val rows = for {
-      (sz, c) <- Sizes.zipWithIndex
+      (sz, c) <- sizes.zipWithIndex
       _ <- 0 until sz
     } yield c
-    val vecs = rows.zipWithIndex.map { case (c, id) =>
-      val v = unit(centers(c).map(x => x + 0.12 * rng.nextGaussian()))
-      (id.toLong, v.map(_.toFloat).toSeq)
-    }
+    rows.toIndexedSeq.map(c =>
+      unit(centers(c).map(x => x + 0.12 * rng.nextGaussian())).map(_.toFloat).toSeq)
+  }
+
+  /** The corpus grouped by cluster id, ids in generation order. */
+  private lazy val corpusDir: String = {
     val dir = scratchDir("graft-anncodebook")
     val s = spark
     import s.implicits._
-    vecs.toDF("vec_id", "embedding")
+    clusteredVectors(1).zipWithIndex.map { case (v, id) => (id.toLong, v) }
+      .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
   }
@@ -136,5 +145,59 @@ class AnnCodebookSpec extends AnyFunSuite with SparkFixture {
     info(s"candidates at nprobe=4: firstN=$cFirst trained=$cTrained")
     assert(cTrained <= (cFirst * 13) / 10,
       s"trained codebook should not buy recall by inflating candidates ($cFirst -> $cTrained)")
+  }
+
+  /** The registered scoreboard's query layout on the same corpus: the
+    * member at the midpoint of each of clusters 1–10 moves to ids 0–9
+    * (the ANN operators query vec_id < 10), the rest follow in cluster
+    * order, written as 8 round-robin files.
+    */
+  private def queryFirstDir(mult: Int): String = {
+    val vecs = clusteredVectors(mult)
+    val sizes = Sizes.map(_ * mult)
+    val starts = sizes.scanLeft(0)(_ + _)
+    val queryPos = (1 to 10).map(c => starts(c) + sizes(c) / 2)
+    val ordered = queryPos.map(vecs) ++ vecs.indices.filterNot(queryPos.toSet).map(vecs)
+    val dir = scratchDir("graft-annrecall")
+    val s = spark
+    import s.implicits._
+    ordered.zipWithIndex.map { case (v, id) => (id.toLong, v) }
+      .toDF("vec_id", "embedding")
+      .repartition(8)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  /** recall@5 hits of 50 per variant on `queryFirstDir(mult)`, and of
+    * the untrained first-nlist IVF control at the same nprobe.
+    */
+  private def scoreboard(mult: Int): (Map[String, Long], Long) = {
+    val dir = queryFirstDir(mult)
+    val board = Similarity.annRecall(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getLong(2)).toMap
+    val exact = Similarity.topKBrute(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val control = Similarity.annIvfWith(spark, dir,
+        Similarity.ivfCodebookFirstN(spark, dir, Similarity.corpusNlist(spark, dir)),
+        nprobe = 4)
+      .collect().count(r => exact.contains((r.getLong(0), r.getLong(1)))).toLong
+    info(s"n=${N * mult}: $board, first-nlist IVF control $control")
+    (board, control)
+  }
+
+  // RECALL.json's recorded hits: the floors hold the scoreboard at or
+  // above what the record claims for each corpus size
+  test("ann_recall at n=2000 keeps RECALL.json's hits; trained IVF >= first-16 control") {
+    val (board, control) = scoreboard(1)
+    val floors = Map("ann_ivf" -> 50L, "ann_ivfpq" -> 49L, "ann_lsh" -> 42L, "ann_pq" -> 46L)
+    floors.foreach { case (v, f) => assert(board(v) >= f, s"$v: ${board(v)} < $f of 50") }
+    assert(board("ann_ivf") >= control)
+  }
+
+  test("ann_recall at n=16000 keeps RECALL.json's hits; trained IVF >= first-16 control") {
+    val (board, control) = scoreboard(8)
+    val floors = Map("ann_ivf" -> 50L, "ann_ivfpq" -> 45L, "ann_lsh" -> 31L, "ann_pq" -> 36L)
+    floors.foreach { case (v, f) => assert(board(v) >= f, s"$v: ${board(v)} < $f of 50") }
+    assert(board("ann_ivf") >= control)
   }
 }

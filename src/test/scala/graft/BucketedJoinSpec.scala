@@ -321,4 +321,39 @@ class BucketedJoinSpec extends AnyFunSuite with SparkFixture {
     assert(iProj >= 0 && iCut > iProj,
       s"vec_id cut should evaluate below the signature projection, got:\n$batchPlan")
   }
+
+  test("components fold: shuffle bytes fall strictly as the batch shrinks from 50% to 5%") {
+    // the fold's data volume is batch-shaped plus a fixed corpus-side
+    // floor; shuffle bytes are deterministic where wall time at this
+    // scale is all fixed overhead
+    import graft.operators.Dedup
+    val dir = "/root/testdata/sf0.01"
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => written.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    val sc = spark.sparkContext
+    def drained(): Long = {
+      assert(org.apache.spark.GraftSparkGlue.drainListenerBus(sc))
+      written.get
+    }
+    sc.addSparkListener(listener)
+    val foldBytes = try Seq(50, 30, 20, 10, 5).map { batchPct =>
+      spark.catalog.clearCache()
+      val (shas, sets, prefAll) = Dedup.splitTables(spark, dir, 100 - batchPct)
+      val base = Dedup.baseComponentLabels(shas, sets, prefAll, s"fold spec base, batch=$batchPct%")
+      base.count()
+      val before = drained()
+      Dedup.foldBatchIntoLabels(shas, sets, prefAll, base).count()
+      batchPct -> (drained() - before)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.catalog.clearCache()
+    }
+    info(s"fold shuffle-write bytes by batch %: $foldBytes")
+    foldBytes.sliding(2).foreach { case Seq((p0, b0), (p1, b1)) =>
+      assert(b1 < b0, s"fold bytes did not fall from batch $p0% ($b0 B) to $p1% ($b1 B)")
+    }
+  }
 }

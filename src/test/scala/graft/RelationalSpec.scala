@@ -44,12 +44,6 @@ class RelationalSpec extends AnyFunSuite with SparkFixture {
       Row(3L, "carol", 0L, 0L), Row(4L, "dave", 0L, 0L)))
   }
 
-  test("typed cogroup formulation of taskE equals the join formulation") {
-    val viaJoin = rows(Relational.taskECountDistinct(spark, fixtureDir))
-    val viaCogroup = rows(Relational.taskECountDistinctCogroup(spark, fixtureDir))
-    assert(viaCogroup === viaJoin)
-  }
-
   test("taskF: supplier qualifies iff SOME pair has max(qty) <= 25 (TaskF.java:95-132)") {
     // supplier 1: pair (1,10) max 30 is excluded but pair (1,11) max 20
     // qualifies; supplier 2's only pair max 30 → out.

@@ -164,6 +164,15 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
       s"build sessions through graft.Bench.builder/session, not by hand: $offenders")
   }
 
+  test("no def main under src/main/scala outside Bench, Verify, PlanAudit, cli/TaskRunner") {
+    // the user-facing mains; a diagnostic belongs in PlanAudit or a spec
+    val mains = Set("Bench.scala", "Verify.scala", "PlanAudit.scala", "cli/TaskRunner.scala")
+      .map("src/main/scala/graft/" + _)
+    val offenders = filesMatching("""def\s+main\s*\(|extends\s+App\b""", "", "src/main/scala")
+      .filterNot(mains.contains)
+    assert(offenders.isEmpty, s"no second diagnostic main: $offenders")
+  }
+
   /** The `conf.set` calls allowed under src/main/scala, by (file, key).
     * An operator that sets a session conf changes every later query of
     * its caller; a per-read or per-write option does not.

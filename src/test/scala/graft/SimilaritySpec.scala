@@ -218,24 +218,19 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       s"DROP TABLE IF EXISTS ${Tables.scopedIndex(spark, indexBase, fixtureDir)._1}")
   }
 
-  test("IVF delete lifecycle: tombstoned vectors vanish; soft and compacted probes agree") {
+  test("IVF delete lifecycle: tombstoned vectors vanish; untouched queries keep their neighbors") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val tomb = (0L until 60L).filter(id => id % 10 == 3 && id >= 16).toSet
 
-    // full standing index (uncompacted, tombstones present) for the
-    // soft-delete probe, exactly like the minhash delete spec
+    // full standing index (uncompacted, tombstones present)
     val full = rows(Similarity.annIvfStanding(spark, fixtureDir))
-    val standingTable =
-      graft.Tables.scopedIndex(spark, "graft_ivf_cell_index", fixtureDir)._1
-    val soft = rows(Similarity.annIvfSoftDeleteProbe(spark, fixtureDir, standingTable))
     // full lifecycle: build, compact without tombstones, probe
     val compacted = rows(Similarity.annIvfStandingDelete(spark, fixtureDir))
 
     assert(compacted.nonEmpty)
     assert(compacted.forall { case (_, n, _) => !tomb.contains(n) },
       "a tombstoned vector survived as a neighbor")
-    assert(soft === compacted, "soft-delete probe diverged from compaction")
     // queries whose full top-5 never touched a tombstone are unaffected
     val untouched = full.groupBy(_._1).filter(_._2.forall(r => !tomb.contains(r._2))).keySet
     assert(untouched.nonEmpty)

@@ -477,6 +477,30 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(replay === chunkKept(1))
   }
 
+  test("dedupBatchAgainstIndex returns materialized rows: the caller's read re-runs no probe join") {
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.DocStreams
+    val docs = Tables.documents(spark, fixtureDir)
+    val idx = scratchDir("graft-bandidx-read") + "/idx"
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = stages.addAndGet(e.stageIds.size)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    // batches 1 and 2 probe an index the previous batch appended to
+    try Seq(Seq(0L, 1L), Seq(2L, 3L), Seq(4L)).zipWithIndex.foreach { case (ids, b) =>
+      val kept = DocStreams.dedupBatchAgainstIndex(docs.filter(col("doc_id").isin(ids: _*)), idx)
+      try {
+        assert(org.apache.spark.GraftSparkGlue.drainListenerBus(sc))
+        stages.set(0)
+        kept.write.mode("overwrite").format("noop").save()
+        assert(org.apache.spark.GraftSparkGlue.drainListenerBus(sc))
+        assert(stages.get === 1, s"batch $b: reading the kept rows ran ${stages.get} stages")
+      } finally SessionMemo.release(kept)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("streamed novelty matches the one-shot run and is idempotent under replay") {
     import org.apache.spark.sql.functions.col
     import graft.streaming.DocStreams
