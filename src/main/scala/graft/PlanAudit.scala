@@ -9,7 +9,8 @@ import org.apache.spark.scheduler._
   * With `--exec`, each named query is additionally RUN to a noop sink
   * three times (cold, warm, recorded warm) and followed by:
   *  - every Spark job of the recorded run with its wall time, the gap
-  *    before it and its description, then the union of the job
+  *    before it and its label (the operators its stages run, read off
+  *    their RDD operation scopes), then the union of the job
   *    intervals and the driver-only time (wall minus that union) — the
   *    "where do the seconds of a job-count-bound query go" readout that
   *    per-query bench totals cannot give;
@@ -39,7 +40,28 @@ object PlanAudit {
     total
   }
 
-  private case class Job(id: Int, desc: String, start: Long, stages: Int, var end: Long = 0L)
+  /** The operation scope names of a job's stages, its final stage
+    * first (a job also lists the parent stages it may skip). AQE
+    * submits its query-stage jobs from its own thread, so their call
+    * site is a `CompletableFuture` frame; the scopes name the operators
+    * the job runs.
+    */
+  def jobScopes(e: SparkListenerJobStart): Seq[String] =
+    e.stageInfos.sortBy(-_.stageId).flatMap(org.apache.spark.GraftSparkGlue.scopeNames).distinct
+
+  /** A job's label: its scope names, else its description, else the
+    * call sites of its stages.
+    */
+  def jobLabel(e: SparkListenerJobStart): String = {
+    val scopes = jobScopes(e)
+    if (scopes.nonEmpty) scopes.mkString("|")
+    else Option(e.properties)
+      .flatMap(p => Option(p.getProperty("spark.job.description")))
+      .filter(_.nonEmpty)
+      .getOrElse(e.stageInfos.map(_.name.takeWhile(_ != '(')).distinct.mkString("|"))
+  }
+
+  private case class Job(id: Int, label: String, start: Long, stages: Int, var end: Long = 0L)
 
   def main(args: Array[String]): Unit = {
     val exec = args.contains("--exec")
@@ -53,13 +75,8 @@ object PlanAudit {
     // written on this thread, read on the listener-bus thread
     @volatile var record = false
     if (exec) spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (record) {
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(_.nonEmpty)
-          .getOrElse(e.stageInfos.map(_.name.takeWhile(_ != '(')).distinct.mkString("|"))
-        jobs.put(e.jobId, Job(e.jobId, d, e.time, e.stageIds.size))
-      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = if (record)
+        jobs.put(e.jobId, Job(e.jobId, jobLabel(e), e.time, e.stageIds.size))
       override def onJobEnd(e: SparkListenerJobEnd): Unit = if (record) {
         Option(jobs.get(e.jobId)).foreach(_.end = e.time)
       }
@@ -98,7 +115,7 @@ object PlanAudit {
         js.foreach { j =>
           val gap = (j.start - latestEnd).max(0L) / 1e3
           latestEnd = latestEnd.max(j.end)
-          println(f"  job ${j.id}%3d ${(j.end - j.start) / 1e3}%7.3f s  gap ${gap}%6.3f s  stages=${j.stages}%2d  ${j.desc.take(90)}")
+          println(f"  job ${j.id}%3d ${(j.end - j.start) / 1e3}%7.3f s  gap ${gap}%6.3f s  stages=${j.stages}%2d  ${j.label.take(90)}")
         }
         val union = unionMs(js.map(j => (j.start, j.end))) / 1e3
         println(f"  job interval union ${union}%.2f s; driver-only ${warm - union}%.2f s")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Tables
@@ -333,32 +333,65 @@ object EventStreams {
 
   /** Idempotent micro-batch merge — the `foreachBatch` body of the
     * production sink pattern: each batch's (possibly updated) window
-    * aggregates OVERWRITE exactly the partitions they touch (dynamic
-    * partition overwrite), so a replayed batch after failure/restart
-    * rewrites the same partitions with the same totals instead of
-    * duplicating rows. At-least-once batch delivery + idempotent merge
-    * = exactly-once table contents — without a transactional table
-    * format. The partition key must be the FULL aggregate key
-    * (window × event_type), not anything coarser: update mode emits
-    * only CHANGED aggregate rows, and a coarser partition would drop
-    * its unchanged siblings on overwrite.
+    * aggregates OVERWRITE exactly the window partitions they touch
+    * (dynamic partition overwrite), so a replayed batch after
+    * failure/restart rewrites the same partitions with the same totals
+    * instead of duplicating rows. At-least-once batch delivery +
+    * idempotent merge = exactly-once table contents — without a
+    * transactional table format.
     *
-    * The write is the micro-batch's single action. A `foreachBatch`
+    * The table is partitioned by window only (`w_start_us`);
+    * `event_type` is a column inside the file, so each window is one
+    * file, not one per (window, type). Update mode emits only the
+    * CHANGED aggregate rows, so overwriting a window with them alone
+    * would drop its unchanged types: the merge reads the stored rows of
+    * the touched windows back and rewrites each window with its
+    * complete row set, the changed rows replacing their stored keys. A
+    * table written with the older (window × event_type) layout needs a
+    * fresh output dir and checkpoint.
+    *
+    * The batch's changed rows are collected once. A `foreachBatch`
     * frame is a view over the stateful plan, so every action on it
-    * re-runs the state-store stage; the write is what runs it once and
-    * commits the epoch's state version. Empty batches (the no-data
-    * batch after the watermark advances among them) are therefore
-    * written, never skipped: zero rows under dynamic overwrite touch no
-    * partition. Dynamic mode is a per-write option, so the session's
+    * re-runs the state-store stage; the collect is its one action,
+    * running that stage once and committing the epoch's state version.
+    * The frame holds at most (windows in the trigger × event types)
+    * rows, and the stored rows of the touched windows are as many, so
+    * the merge runs on the driver. A batch with no changed rows (the
+    * no-data batch after the watermark advances, an all-late batch)
+    * writes nothing. The stored rows are read with the known schema
+    * from the touched window dirs that exist, never from the whole
+    * table. Dynamic mode is a per-write option, so the session's
     * `partitionOverwriteMode` is left as the caller set it.
     */
-  def mergeWindowCounts(batch: DataFrame, outDir: String): Unit =
-    batch
-      .withColumn("w_start_us", expr("unix_micros(w_start)"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("w_start_us", "event_type")
-      .parquet(outDir)
+  def mergeWindowCounts(batch: DataFrame, outDir: String): Unit = {
+    val wStartUs = expr("unix_micros(w_start)")
+    val keyed = batch.withColumn("w_start_us", wStartUs)
+    val changed = keyed.collect()
+    if (changed.nonEmpty) {
+      val spark = batch.sparkSession
+      val sc = spark.sparkContext
+      def wStart(r: Row) = r.getAs[Long]("w_start_us")
+      def key(r: Row) = (wStart(r), r.getAs[String]("event_type"))
+      val root = new org.apache.hadoop.fs.Path(outDir)
+      val fs = root.getFileSystem(sc.hadoopConfiguration)
+      val stored = if (fs.exists(root)) fs.listStatus(root).map(_.getPath.getName).toSet
+        else Set.empty[String]
+      val touched = changed.map(r => s"w_start_us=${wStart(r)}").distinct.filter(stored)
+      val replaced = changed.map(key).toSet
+      val kept = if (touched.isEmpty) Array.empty[Row] else
+        spark.read.schema(batch.schema).parquet(touched.map(d => s"$outDir/$d").toSeq: _*)
+          .withColumn("w_start_us", wStartUs)
+          .collect().filterNot(r => replaced(key(r)))
+      // each window's rows in one partition, so each window is one file
+      val windows = (changed ++ kept).groupBy(wStart).values.toSeq
+      val rows = sc.parallelize(windows, windows.size.min(sc.defaultParallelism)).flatMap(_.toSeq)
+      spark.createDataFrame(rows, keyed.schema)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("w_start_us")
+        .parquet(outDir)
+    }
+  }
 
   /** Streaming writer wiring for [[mergeWindowCounts]]: windowed counts
     * in update mode, each micro-batch merged idempotently.

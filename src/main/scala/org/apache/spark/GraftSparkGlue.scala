@@ -13,4 +13,12 @@ object GraftSparkGlue {
   def drainListenerBus(sc: SparkContext, timeoutMillis: Long = 10000L): Boolean =
     try { sc.listenerBus.waitUntilEmpty(timeoutMillis); true }
     catch { case _: Throwable => false }
+
+  /** The operation scope names of a stage's RDDs, without repeats: the
+    * SQL operators that built them (`Exchange`, `WholeStageCodegen (3)`,
+    * `StateStoreSave`) or the RDD methods (`map`). The scope is
+    * `private[spark]`.
+    */
+  def scopeNames(stage: org.apache.spark.scheduler.StageInfo): Seq[String] =
+    stage.rddInfos.flatMap(_.scope.map(_.name)).distinct
 }

@@ -604,26 +604,44 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     } finally q.stop()
   }
 
-  /** Runs `body` with a listener that counts the jobs of each (query,
+  /** Runs `body` with a listener that records the jobs of each (query,
     * micro-batch), read off the local properties the engine sets on
-    * every job a batch submits. `body` gets the drained counts of one
-    * query, by batch id.
+    * every job a batch submits. `body` gets the drained jobs of one
+    * query by batch id, each job as its operation scope names
+    * ([[PlanAudit.jobScopes]]).
     */
-  private def withJobsPerBatch[T](body: (java.util.UUID => Map[Long, Int]) => T): T = {
-    val counts = scala.collection.mutable.Map.empty[(String, Long), Int]
+  private def withJobsPerBatch[T](body: (java.util.UUID => Map[Long, Seq[Seq[String]]]) => T): T = {
+    val jobs = scala.collection.mutable.Map.empty[(String, Long), Vector[Seq[String]]]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         for (p <- Option(e.properties);
              q <- Option(p.getProperty("sql.streaming.queryId"));
              b <- Option(p.getProperty("streaming.sql.batchId")))
-          counts.synchronized(counts((q, b.toLong)) = counts.getOrElse((q, b.toLong), 0) + 1)
+          jobs.synchronized(jobs((q, b.toLong)) =
+            jobs.getOrElse((q, b.toLong), Vector.empty) :+ PlanAudit.jobScopes(e))
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try body { id =>
       assert(org.apache.spark.GraftSparkGlue.drainListenerBus(sc))
-      counts.synchronized(counts.toMap.collect { case ((q, b), n) if q == id.toString => b -> n })
+      jobs.synchronized(jobs.toMap.collect { case ((q, b), js) if q == id.toString => b -> js })
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** The upsert sink's per-batch invariant: every batch that ran
+    * submitted exactly one job that runs the state-store stage, and a
+    * batch that updated no aggregate row submitted nothing else (no
+    * write).
+    */
+  private def assertOneStateJobPerBatch(
+      jobs: Map[Long, Seq[Seq[String]]], ran: Seq[StreamingQueryProgress]): Unit = {
+    assert(jobs.keySet === ran.map(_.batchId).toSet)
+    jobs.foreach { case (b, js) =>
+      assert(js.count(_.contains("StateStoreSave")) === 1, s"batch $b jobs' scopes: $js")
+    }
+    ran.filter(_.stateOperators.head.numRowsUpdated == 0).foreach { p =>
+      assert(jobs(p.batchId).size === 1, s"batch ${p.batchId} jobs' scopes: ${jobs(p.batchId)}")
+    }
   }
 
   /** The micro-batches `q` has run (idle progress events carry no
@@ -652,7 +670,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .map(r => (r.getAs[Timestamp]("w_start"), r.getAs[String]("event_type")) ->
         r.getAs[Long]("cnt")).toMap
 
-  test("upsertWindowCounts runs one job per micro-batch, the no-data batch included") {
+  test("upsertWindowCounts runs the state stage once per batch, no write when empty") {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -669,15 +687,54 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         // moves the watermark to 11:30, so a no-data batch follows.
         in.addData(ev(3, ts(13, 30), 1), ev(4, ts(10, 59), 2))
         val ran = batchesRun(q)(drained(5))
-        val jobs = jobsOf(q.id)
-        assert(jobs.keySet === ran.map(_.batchId).toSet)
-        assert(jobs.values.forall(_ == 1), s"jobs per batch id: $jobs")
+        assertOneStateJobPerBatch(jobsOf(q.id), ran)
+        assert(ran.last.stateOperators.head.numRowsUpdated === 0L) // the no-data batch
         // each batch ran the state stage once: updates are counted once
         assert(ran.map(_.stateOperators.head.numRowsUpdated).sum === 4L)
         assert(windowCounts(outDir) === Map(
           (ts(10), "view") -> 3L, (ts(10), "click") -> 1L, (ts(13), "view") -> 1L))
       } finally q.stop()
     }
+  }
+
+  test("a batch that changes one event_type of a window keeps the window's other types") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val outDir = scratchDir("graft-upsert")
+    val in = MemoryStream[Ev]
+    val q = EventStreams.upsertWindowCounts(in.toDF(), outDir,
+      scratchDir("graft-upsert-chk")).start()
+    val want = Map((ts(10), "view") -> 2L, (ts(10), "click") -> 1L,
+      (ts(10), "buy") -> 1L, (ts(11), "view") -> 1L)
+    def assertTable(): Unit = {
+      assert(windowCounts(outDir) === want)
+      assert(spark.read.parquet(outDir).count() === want.size.toLong)
+    }
+    try {
+      in.addData(ev(0, ts(10, 5), 1), ev(1, ts(10, 40), 2, "click"),
+        ev(2, ts(10, 50), 3, "buy"), ev(3, ts(11, 10), 1))
+      q.processAllAvailable()
+      // only (10:00, view) changes: the window's rewrite must carry
+      // click and buy over from the stored file
+      in.addData(ev(4, ts(10, 55), 2))
+      q.processAllAvailable()
+      assertTable()
+    } finally q.stop()
+
+    // a redelivered batch that holds only the changed row, merged twice
+    val replay = EventStreams.windowedCounts(Seq(ev(0, ts(10, 5), 1), ev(4, ts(10, 55), 2)).toDF())
+    EventStreams.mergeWindowCounts(replay, outDir)
+    EventStreams.mergeWindowCounts(replay, outDir)
+    assertTable()
+
+    // one file per window, event_type inside it
+    val windows = tableBytes(outDir).keys.filter(_.endsWith(".parquet"))
+      .groupBy(f => java.nio.file.Paths.get(f).getParent.toString)
+    assert(windows.keySet.size === 2 && windows.keySet.forall(_.startsWith("w_start_us=")),
+      windows.keySet)
+    assert(windows.values.forall(_.size == 1), windows)
+    assert(!tableBytes(outDir).keys.exists(_.contains("event_type=")))
   }
 
   /** Every file under `dir`, by relative path, with its bytes. */
@@ -704,7 +761,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         batchesRun(q)(drained(2))
         val written = tableBytes(outDir)
         // both windows end at or before the 11:30 watermark: every row is
-        // dropped and the batch writes zero rows
+        // dropped and the batch writes nothing
         in.addData(ev(2, ts(9, 0), 2), ev(3, ts(10, 30), 2))
         val late = batchesRun(q)(_.map(_.numInputRows).sum == 4).last
         assert(late.numInputRows === 2L)
@@ -715,9 +772,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         val ran = batchesRun(q)(drained(5))
         assert(windowCounts(outDir) === Map(
           (ts(10), "view") -> 1L, (ts(13), "view") -> 2L))
-        val jobs = jobsOf(q.id)
-        assert(jobs.keySet === ran.map(_.batchId).toSet)
-        assert(jobs.values.forall(_ == 1), s"jobs per batch id: $jobs")
+        assertOneStateJobPerBatch(jobsOf(q.id), ran)
+        assert(ran.count(_.stateOperators.head.numRowsUpdated == 0) >= 2) // late and no-data
       } finally q.stop()
     }
   }
