@@ -78,14 +78,13 @@ object SessionMemo {
   private def fingerprint(spark: SparkSession, dir: String): Seq[(String, Long, Long)] = {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return Seq.empty
-    val it = fs.listFiles(path, true)
-    val files = Seq.newBuilder[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    // listStatus, not listFiles: each LocatedFileStatus reads its file's
+    // permission, which the local filesystem without the native Hadoop
+    // library gets by running `ls -ld` per file
+    def files(p: Path): Seq[(String, Long, Long)] = fs.listStatus(p).toSeq.flatMap { f =>
+      if (f.isDirectory) files(f.getPath) else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
     }
-    files.result().sorted
+    if (fs.exists(path)) files(path).sorted else Seq.empty
   }
 
   /** Frees every `LogicalRDD` leaf of each `DataFrame` in `v` — the

@@ -367,8 +367,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
     def upsert(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
       val existing =
-        try spark.read.parquet(target)
-        catch { case _: Throwable => spark.emptyDataset[Ev].toDF() }
+        if (new java.io.File(target).exists) spark.read.parquet(target)
+        else spark.emptyDataset[Ev].toDF()
       val deduped = batch.dropDuplicates("event_id")
       existing
         .join(deduped.select("event_id"), Seq("event_id"), "left_anti")
