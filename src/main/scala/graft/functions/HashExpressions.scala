@@ -957,10 +957,13 @@ case class DamerauLevenshtein(left: Expression, right: Expression)
   * `typedLit` codebooks put m·ksub·dsub doubles into every projection,
   * bloating each ANN plan to hundreds of KB that Catalyst re-analyzed
   * and AQE re-stringified per action, and the HOF folds that consumed
-  * them ran interpreted per element.
+  * them ran interpreted per element. The codebook is an immutable
+  * `IndexedSeq`, so two expressions built from equal codebooks are
+  * equal, `semanticEquals` and share one canonical form (an array
+  * argument compares by identity).
   */
 private[functions] trait PqCodebook { self: Expression =>
-  def cents: Array[Array[Double]]
+  def cents: IndexedSeq[IndexedSeq[Double]]
   def m: Int
   @transient protected final lazy val dim: Int = cents(0).length
   @transient protected final lazy val dsub: Int = dim / m
@@ -968,7 +971,7 @@ private[functions] trait PqCodebook { self: Expression =>
   @transient protected final lazy val flatCents: Array[Double] = {
     val out = new Array[Double](k * dim)
     var c = 0
-    while (c < k) { System.arraycopy(cents(c), 0, out, c * dim, dim); c += 1 }
+    while (c < k) { cents(c).copyToArray(out, c * dim, dim); c += 1 }
     out
   }
   /** selfs(c·m + ms) = Σ over the ms-subspace of cents(c)², the same
@@ -982,7 +985,7 @@ private[functions] trait PqCodebook { self: Expression =>
       while (ms < m) {
         var s = 0.0
         var j = 0
-        while (j < dsub) { val x = cents(c)(ms * dsub + j); s += x * x; j += 1 }
+        while (j < dsub) { val x = flatCents(c * dim + ms * dsub + j); s += x * x; j += 1 }
         out(c * m + ms) = s
         ms += 1
       }
@@ -1000,13 +1003,17 @@ private[functions] trait PqCodebook { self: Expression =>
       case other => TypeCheckResult.TypeCheckFailure(
         s"$name requires ARRAY<DOUBLE> input, got ${other.catalogString}")
     }
+  /** The plan-string form of the codebook: its shape, not its doubles. */
+  protected def codebookString: String =
+    s"codebook[${cents.length}x${cents.headOption.fold(0)(_.length)}]"
 }
 
 /** `pq_encode(v)` → ARRAY<BIGINT> of m 1-based codebook positions
   * (see [[HashOps.pqEncode]]).
   */
-case class PqEncode(child: Expression, cents: Array[Array[Double]], m: Int)
+case class PqEncode(child: Expression, cents: IndexedSeq[IndexedSeq[Double]], m: Int)
     extends UnaryExpression with PqCodebook {
+  override protected def stringArgs: Iterator[Any] = Iterator(child, codebookString, m)
   override def checkInputDataTypes(): TypeCheckResult =
     checkPqInput(prettyName, child)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -1026,9 +1033,10 @@ case class PqEncode(child: Expression, cents: Array[Array[Double]], m: Int)
 /** `pq_lut(v)` → ARRAY<DOUBLE> of m·k ADC partial distances
   * (see [[HashOps.pqLut]]).
   */
-case class PqLut(child: Expression, cents: Array[Array[Double]], m: Int,
+case class PqLut(child: Expression, cents: IndexedSeq[IndexedSeq[Double]], m: Int,
                  addSelf: Boolean)
     extends UnaryExpression with PqCodebook {
+  override protected def stringArgs: Iterator[Any] = Iterator(child, codebookString, m, addSelf)
   override def checkInputDataTypes(): TypeCheckResult =
     checkPqInput(prettyName, child)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
@@ -1050,7 +1058,7 @@ case class PqLut(child: Expression, cents: Array[Array[Double]], m: Int,
   * [[HashOps.poissonBootWeights]]).
   */
 case class PoissonBootWeights(left: Expression, right: Expression,
-    prefix: String, reps: Int, cdf: Array[Long])
+    prefix: String, reps: Int, cdf: IndexedSeq[Long])
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   require(reps > 0, s"poisson_boot_weights: need reps > 0, got $reps")
   override def checkInputDataTypes(): TypeCheckResult =
@@ -1063,12 +1071,13 @@ case class PoissonBootWeights(left: Expression, right: Expression,
   override def prettyName: String = "poisson_boot_weights"
   @transient private lazy val prefixBytes: Array[Array[Byte]] =
     Array.tabulate(reps)(r => s"$prefix:$r".getBytes("UTF-8"))
+  @transient private lazy val cdfArray: Array[Long] = cdf.toArray
   override protected def nullSafeEval(a: Any, b: Any): Any =
     HashOps.poissonBootWeights(a.asInstanceOf[Long], b.asInstanceOf[Long],
-      prefixBytes, cdf)
+      prefixBytes, cdfArray)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val pRef = ctx.addReferenceObj("bootPrefixes", prefixBytes, "byte[][]")
-    val cRef = ctx.addReferenceObj("bootCdf", cdf, "long[]")
+    val cRef = ctx.addReferenceObj("bootCdf", cdfArray, "long[]")
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"${ev.value} = graft.functions.HashOps.poissonBootWeights($a, $b, $pRef, $cRef);")
   }
@@ -1125,7 +1134,7 @@ object functions {
   def poisson_boot_weights(a: Column, b: Column, prefix: String, reps: Int,
       cdf: Array[Long]): Column =
     GraftGlue.column(PoissonBootWeights(GraftGlue.expression(a),
-      GraftGlue.expression(b), prefix, reps, cdf))
+      GraftGlue.expression(b), prefix, reps, cdf.toIndexedSeq))
   def md5_minhash_sig(c: Column, numHashes: Int): Column =
     GraftGlue.column(Md5MinhashSig(GraftGlue.expression(c), numHashes))
   def md5_simhash56(c: Column): Column =
@@ -1133,9 +1142,10 @@ object functions {
   def md5_bigram_feat_counts(c: Column, buckets: Int): Column =
     GraftGlue.column(Md5BigramFeatCounts(GraftGlue.expression(c), buckets))
   def pq_encode(v: Column, cents: Array[Array[Double]], m: Int): Column =
-    GraftGlue.column(PqEncode(GraftGlue.expression(v), cents, m))
+    GraftGlue.column(PqEncode(GraftGlue.expression(v), cents.map(_.toIndexedSeq).toIndexedSeq, m))
   def pq_lut(v: Column, cents: Array[Array[Double]], m: Int, addSelf: Boolean): Column =
-    GraftGlue.column(PqLut(GraftGlue.expression(v), cents, m, addSelf))
+    GraftGlue.column(PqLut(GraftGlue.expression(v), cents.map(_.toIndexedSeq).toIndexedSeq, m,
+      addSelf))
   def jaro_winkler(a: Column, b: Column): Column =
     GraftGlue.column(JaroWinklerSim(GraftGlue.expression(a), GraftGlue.expression(b)))
   def damerau_levenshtein(a: Column, b: Column): Column =

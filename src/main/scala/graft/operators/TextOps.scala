@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{SessionMemo, Tables}
+import graft.functions.TokenFunctions.{bpe_pairs, bpe_pieces}
 
 /** Text-analysis operators over the `documents` table.
   *
@@ -503,116 +504,91 @@ object TextOps {
     * the corpus (the classic BPE-at-scale trick: corpus-sized work
     * collapses to vocab-sized work after one wordcount), and the top-K
     * selection is `orderBy().limit()` → `TakeOrderedAndProject`
-    * (per-partition heaps, no global sort). [[bpeTrain]] iterates this
+    * (per-partition heaps, no global sort). The character pairs are
+    * the native merge kernel's under zero merges
+    * ([[graft.functions.BpeMerge]]), glued back to the two-character
+    * string `substring(word, i, 2)` names. [[bpeTrain]] iterates this
     * to an actual merge sequence.
     */
   def bpePairCounts(spark: SparkSession, dir: String, topK: Int = 20): DataFrame =
     Tables.documentsSpread(spark, dir)
       .select(explode(tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
-      .filter(length(col("word")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, length(word) - 1), i -> substring(word, i, 2))")).as("pair"),
-        col("wcnt"))
-      .groupBy(col("pair")).agg(sum(col("wcnt")).as("cnt"))
+      .select(explode(bpe_pairs(col("word"), Nil)).as("p"), col("wcnt"))
+      .groupBy(concat(col("p.l"), col("p.r")).as("pair")).agg(sum(col("wcnt")).as("cnt"))
       .orderBy(col("cnt").desc, col("pair").asc)
       .limit(topK)
 
   /** Iterative BPE training: `rounds` greedy merges. Each round counts
-    * adjacent symbol pairs over the vocabulary (weighted by word
-    * count), collects the single best (cnt desc, pair asc) — one row,
-    * metadata-scale — and rewrites every word's symbol array with the
-    * standard left-to-right non-overlapping merge via a codegen'd-HOF
-    * fold. Driver-side loop, vocab-sized distributed work per round
-    * (the checkpointed-rounds pattern, like the pagerank loop);
-    * returns the merge table. The registered `bpe_train` /
-    * `bpe_vocab` rows ([[bpeTrainTable]], [[bpeVocab]]) oracle the
-    * N-round loop end-to-end against the same DuckDB recursive replay
-    * `bpe_encode` uses.
+    * the adjacent piece pairs of every vocabulary word under the merges
+    * learned so far (weighted by word count) and collects the single
+    * best (cnt desc, pair asc): one `head()` of one row. The native
+    * merge kernel ([[graft.functions.BpeMerge]]) replays the merges
+    * from each word's characters, so the vocabulary is never rewritten
+    * between rounds, and every round runs the same compiled plan over
+    * the same checkpointed (word, wcnt) table. Driver-side loop,
+    * vocab-sized distributed work per round; returns the merge table.
+    * The registered `bpe_train` / `bpe_vocab` rows ([[bpeTrainTable]],
+    * [[bpeVocab]]) oracle the N-round loop end-to-end against the same
+    * DuckDB recursive replay `bpe_encode` uses.
     */
   def bpeTrain(spark: SparkSession, dir: String, rounds: Int = 3): Seq[(Int, String, String, Long)] =
-    bpeTrainStateShared(spark, dir, rounds)._1
+    bpeTrainState(spark, dir, rounds)._1
 
   private[graft] val bpeMemo =
     new SessionMemo[Int, (Seq[(Int, String, String, Long)], DataFrame)]
 
-  /** [[bpeTrainState]] memoized per (application, corpus, rounds): the
-    * merge sequence is driver state; the final word table is snapshot
-    * via eager localCheckpoint (lineage-free block-manager RDD — not a
-    * catalog cache entry, so a harness `clearCache()` between queries
-    * can't invalidate it) and the loop's persist handle is released
-    * here, so no caller leaks a MEMORY_AND_DISK entry and the three
-    * consumers ([[bpeTrain]], [[bpeTrainTable]], [[bpeVocab]]) really
-    * do share ONE training loop ([[graft.SessionMemo]]).
-    */
-  private def bpeTrainStateShared(spark: SparkSession, dir: String,
-      rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) =
-    bpeMemo.getOrBuild(spark, dir, rounds) {
-      val (merges, words) = bpeTrainState(spark, dir, rounds)
-      val snap = words.localCheckpoint(true)
-      words.unpersist()
-      (merges, snap)
-    }
-
-  /** [[bpeTrain]] plus the post-training vocabulary state: the merge
-    * sequence AND the final (syms, wcnt) word table (persisted — the
-    * one caller, [[bpeTrainStateShared]], swaps the handle for an
-    * eager localCheckpoint and releases it). All registered training
-    * rows derive from this one loop via the shared cache.
+  /** The merge sequence plus the (word, wcnt) vocabulary it was
+    * trained on, memoized per (application, corpus, rounds)
+    * ([[graft.SessionMemo]]): [[bpeTrain]], [[bpeTrainTable]],
+    * [[bpeVocab]] and [[bpeEncode]] share one training loop. The
+    * vocabulary is an eager localCheckpoint (a lineage-free
+    * block-manager RDD, not a catalog cache entry, so a harness
+    * `clearCache()` between queries can't invalidate it).
     */
   private def bpeTrainState(spark: SparkSession, dir: String,
-      rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var words = Tables.documentsSpread(spark, dir)
-      .select(explode(tokens(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
-      .select(expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))").as("syms"),
-        col("wcnt"))
-      .persist(sl)
-    val merges = scala.collection.mutable.ListBuffer[(Int, String, String, Long)]()
-    var round = 1
-    while (round <= rounds) {
+      rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) =
+    bpeMemo.getOrBuild(spark, dir, rounds) {
+      val vocab = Tables.documentsSpread(spark, dir)
+        .select(explode(tokens(col("text"))).as("word"))
+        .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
+        .localCheckpoint(true)
+      try (bpeMerges(vocab, rounds), vocab)
+      catch { case e: Throwable => SessionMemo.release(vocab); throw e }
+    }
+
+  /** Up to `rounds` greedy merges over `vocab`, one `head()` each;
+    * fewer when the pairs run out.
+    */
+  @scala.annotation.tailrec
+  private def bpeMerges(vocab: DataFrame, rounds: Int,
+      merges: Vector[(Int, String, String, Long)] = Vector.empty): Seq[(Int, String, String, Long)] =
+    if (merges.size == rounds) merges
+    else {
       // Best pair = (cnt desc, l asc, r asc) as ONE scalar aggregate:
       // min over struct(-cnt, l, r) — struct ordering is field-by-field,
       // so negating cnt turns the mixed-direction argmax into a plain
       // min. Partial mins fold map-side; the final exchange carries one
       // 1-row partial per partition — no per-round ordering anywhere,
-      // not even per-partition heaps. The single collected row is both
-      // the round's OUTPUT (the merge-table entry) and the literal the
-      // next rewrite compiles in — driver-state by construction, like
-      // dedupComponents' convergence scalars.
-      val top = words
-        .filter(size(col("syms")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(1, size(syms) - 1), " +
-            "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))")).as("p"),
-          col("wcnt"))
+      // not even per-partition heaps. The single collected row is the
+      // round's merge-table entry and joins the merge list the next
+      // round's kernel replays.
+      val top = vocab
+        .select(explode(bpe_pairs(col("word"), mergePairs(merges))).as("p"), col("wcnt"))
         .groupBy(col("p.l").as("l"), col("p.r").as("r"))
         .agg(sum(col("wcnt")).as("cnt"))
         .agg(min(struct((-col("cnt")).as("negCnt"), col("l"), col("r"))).as("best"))
         .head()
-      if (top.isNullAt(0)) { round = rounds + 1 }
+      if (top.isNullAt(0)) merges
       else {
         val best = top.getStruct(0)
-        val (a, b, cnt) = (best.getString(1), best.getString(2), -best.getLong(0))
-        merges += ((round, a, b, cnt))
-        // left-to-right non-overlapping merge: fold the symbol array,
-        // gluing x onto the accumulator tail when (tail, x) = (a, b)
-        val merged = aggregate(
-          col("syms"), array().cast("array<string>"),
-          (acc, x) => when(
-            size(acc) > 0 && element_at(acc, -1) === lit(a) && x === lit(b),
-            concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-            .otherwise(concat(acc, array(x))))
-        val next = words.select(merged.as("syms"), col("wcnt")).persist(sl)
-        next.count() // materialize before dropping the parent
-        words.unpersist()
-        words = next
-        round += 1
+        bpeMerges(vocab, rounds,
+          merges :+ ((merges.size + 1, best.getString(1), best.getString(2), -best.getLong(0))))
       }
     }
-    (merges.toList, words)
-  }
+
+  private def mergePairs(merges: Seq[(Int, String, String, Long)]): Seq[(String, String)] =
+    merges.map { case (_, l, r, _) => (l, r) }
 
   /** The registered merge table: [[bpeTrain]]'s N greedy rounds as a
     * (round, l, r, cnt) relation — the artifact a tokenizer TRAINS
@@ -623,7 +599,7 @@ object TextOps {
     * is hash-proven, not just round 1's counting statistic.
     */
   def bpeTrainTable(spark: SparkSession, dir: String, rounds: Int = 8): DataFrame = {
-    val (merges, _) = bpeTrainStateShared(spark, dir, rounds)
+    val merges = bpeTrain(spark, dir, rounds)
     import spark.implicits._
     val out = merges.map { case (k, l, r, c) => (k.toLong, l, r, c) }
     // explicit schema via toDF on a typed Dataset: survives rounds
@@ -633,14 +609,15 @@ object TextOps {
 
   /** The post-training vocabulary: every SYMBOL the N-merge tokenizer
     * can emit, with its corpus frequency (occurrences weighted by word
-    * count) — vocab.json's count column. One explode + rollup over the
-    * final vocab-sized word table; symbol inventory scale, never
+    * count) — vocab.json's count column. The merge kernel splits each
+    * word of the checkpointed training vocabulary into its final
+    * pieces; one explode + rollup, symbol inventory scale, never
     * corpus scale.
     */
   def bpeVocab(spark: SparkSession, dir: String, rounds: Int = 8): DataFrame = {
-    val (_, words) = bpeTrainStateShared(spark, dir, rounds)
-    words
-      .select(explode(col("syms")).as("piece"), col("wcnt"))
+    val (merges, vocab) = bpeTrainState(spark, dir, rounds)
+    vocab
+      .select(explode(bpe_pieces(col("word"), mergePairs(merges))).as("piece"), col("wcnt"))
       .groupBy(col("piece"))
       .agg(sum(col("wcnt")).as("freq"))
   }
@@ -648,37 +625,28 @@ object TextOps {
   /** BPE encode: apply [[bpeTrain]]'s learned merge sequence to every
     * document — the tokenize step a trained BPE vocabulary exists FOR.
     * Each token splits to characters and replays the merges in training
-    * order (the same left-to-right non-overlapping fold bpeTrain uses
-    * to rewrite its vocabulary), and the document's piece sequence is
-    * flattened across tokens.
+    * order (the same left-to-right non-overlapping passes training
+    * counts pairs under), and the document's piece sequence is
+    * concatenated across tokens.
     *
     * Scale shape: after training (bounded driver rounds, vocab-sized
     * work — the model-building cost), the encode itself is ONE narrow
-    * projection: nested codegen'd HOFs (transform → aggregate) applied
-    * per document, zero joins, zero shuffles, no vocabulary broadcast
-    * needed because the merge table is a handful of literals baked into
-    * the expression tree. The fold is deterministic string work, so the
-    * whole train+encode pipeline replays hash-for-hash in the DuckDB
-    * oracle (list_reduce over a space-joined accumulator — symbols
-    * never contain whitespace, ws_tokens guarantees it).
+    * projection: `ws_tokens`, then the native merge kernel
+    * ([[graft.functions.BpeMerge]]) over the token array, both
+    * codegen'd; zero joins, zero shuffles, no vocabulary broadcast
+    * (the merge list is a handful of strings the kernel holds). The
+    * replay is deterministic string work, so the whole train+encode
+    * pipeline replays hash-for-hash in the DuckDB oracle (list_reduce
+    * over a space-joined accumulator — symbols never contain
+    * whitespace, ws_tokens guarantees it).
     */
   def bpeEncode(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
-    val merges = bpeTrain(spark, dir, rounds).map { case (_, l, r, _) => (l, r) }
-    def foldOnce(syms: Column, a: String, b: String): Column =
-      aggregate(syms, array().cast("array<string>"),
-        (acc, x) => when(
-          size(acc) > 0 && element_at(acc, -1) === lit(a) && x === lit(b),
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-          .otherwise(concat(acc, array(x))))
-    val encTok: Column => Column = w => {
-      val chars = transform(sequence(lit(1), length(w)), i => w.substr(i, lit(1)))
-      merges.foldLeft(chars) { case (s, (a, b)) => foldOnce(s, a, b) }
-    }
+    val merges = mergePairs(bpeTrain(spark, dir, rounds))
     Tables.documentsSpread(spark, dir)
       .select(col("doc_id"), tokens(col("text")).as("ts"))
       .select(col("doc_id"),
         size(col("ts")).cast("long").as("n_tokens"),
-        flatten(transform(col("ts"), encTok)).as("ps"))
+        bpe_pieces(col("ts"), merges).as("ps"))
       .select(col("doc_id"), col("n_tokens"),
         size(col("ps")).cast("long").as("n_pieces"),
         array_join(col("ps"), " ").as("pieces"))
@@ -804,7 +772,7 @@ object TextOps {
     new SessionMemo[(Int, Int, Int), (DataFrame, DataFrame)]
 
   /** [[unigramState]] memoized per (application, corpus, params) in a
-    * [[graft.SessionMemo]], like [[bpeTrainStateShared]]: one EM loop
+    * [[graft.SessionMemo]], like [[bpeTrainState]]: one EM loop
     * per corpus, the final vocab and segmentation pinned as eager
     * localCheckpoints, the intermediate occurrence cache released.
     */

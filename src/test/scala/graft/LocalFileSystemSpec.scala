@@ -21,7 +21,8 @@ import graft.streaming.EventStreams.Ev
 
 /** The `file:` binding in `core-site.xml` ([[graft.io.LocalFileSystem]],
   * [[graft.io.LocalFs]]): it resolves from a fresh `Configuration`,
-  * matches stock `RawLocalFileSystem` on permissions and link status,
+  * matches stock `RawLocalFileSystem` on permissions, link status and
+  * the permission, owner and group its statuses report,
   * and starts no child process for the engine's writers and streaming
   * checkpoints.
   */
@@ -115,6 +116,46 @@ class LocalFileSystemSpec extends AnyFunSuite with SparkFixture {
     for (fs <- Seq(a, b)) intercept[FileNotFoundException](fs.getFileLinkStatus(new Path(s"$dir/missing")))
   }
 
+  @annotation.nowarn("cat=deprecation") // FileStatus's Writable methods
+  private def writableRoundTrip(s: FileStatus): FileStatus = {
+    val buf = new java.io.ByteArrayOutputStream()
+    s.write(new java.io.DataOutputStream(buf))
+    val back = new FileStatus()
+    back.readFields(new java.io.DataInputStream(new java.io.ByteArrayInputStream(buf.toByteArray)))
+    back
+  }
+
+  test("statuses read permission, owner and group as stock does, ls -ld included") {
+    val dir = scratchDir("graft-fs-status")
+    def chmod(mode: String, p: String): Unit =
+      assert(new ProcessBuilder("chmod", mode, p).start().waitFor() === 0, s"chmod $mode $p")
+    for ((name, m) <- Seq("f640" -> "640", "f4755" -> "4755", "f000" -> "000")) {
+      Files.createFile(Paths.get(s"$dir/$name"))
+      chmod(m, s"$dir/$name")
+    }
+    for ((name, m) <- Seq("d755" -> "755", "d1777" -> "1777", "d2775" -> "2775", "d1700" -> "1700")) {
+      Files.createDirectory(Paths.get(s"$dir/$name"))
+      chmod(m, s"$dir/$name")
+    }
+    Files.createSymbolicLink(Paths.get(s"$dir/link"), Paths.get(s"$dir/f640"))
+    val (a, b) = (stock, forkless)
+    def owned(s: FileStatus) = (s.getPath, s.getPermission, s.getOwner, s.getGroup)
+    def listed(fs: FileSystem) = fs.listStatus(new Path(dir)).map(owned).sortBy(_._1.toString).toSeq
+    assert(listed(b).size === 8)
+    assert(listed(b) === listed(a))
+    for (st <- b.listStatus(new Path(dir)))
+      assert(owned(b.getFileStatus(st.getPath)) === owned(a.getFileStatus(st.getPath)), st.getPath)
+    def located(fs: FileSystem) = {
+      val it = fs.listLocatedStatus(new Path(dir))
+      Iterator.continually(it).takeWhile(_.hasNext).map(i => owned(i.next())).toSeq.sortBy(_._1.toString)
+    }
+    assert(located(b) === located(a))
+    assert(b.getFileStatus(new Path(s"$dir/d1777")).getPermission.getStickyBit)
+    // a serialized status carries the values too
+    assert(owned(writableRoundTrip(b.getFileStatus(new Path(s"$dir/f640")))) ===
+      owned(a.getFileStatus(new Path(s"$dir/f640"))))
+  }
+
   test("no Hadoop Shell process on the kv, overwrite, upsert and memo paths") {
     val s = spark
     import s.implicits._
@@ -146,6 +187,20 @@ class LocalFileSystemSpec extends AnyFunSuite with SparkFixture {
       // a memo build and hit, each fingerprinting the dir by one listing
       val memo = new SessionMemo[Int, Int]
       assert(Seq(1, 2).map(v => memo.getOrBuild(spark, s"$dir/src", 0)(v)) === Seq(1, 1))
+      // listings whose statuses carry permission, owner and group
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val files = fs.listFiles(new Path(dir), true)
+      var n = 0
+      while (files.hasNext) {
+        val f = files.next()
+        assert(f.getPermission != null && f.getOwner.nonEmpty && f.getGroup.nonEmpty)
+        n += 1
+      }
+      assert(n > 10, s"$n files listed")
+      val top = fs.listLocatedStatus(new Path(dir))
+      while (top.hasNext) assert(top.next().getOwner.nonEmpty)
+      val st = fs.getFileStatus(new Path(s"$dir/out"))
+      assert(st.getPermission != null && st.getOwner.nonEmpty && st.getGroup.nonEmpty)
     } finally rec.stop()
     val jfr = Paths.get(s"$dir/process.jfr")
     rec.dump(jfr)

@@ -195,4 +195,27 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
     assert(offenders.isEmpty,
       s"pass a per-read or per-write option instead of setting the session conf: $offenders")
   }
+
+  /** The case classes under `root` with an `Array[`-typed parameter in
+    * their first parameter list.
+    */
+  private def arrayArgCaseClasses(root: String): List[String] =
+    filesMatching("""case\s+class""", "", root).flatMap { f =>
+      val src = java.nio.file.Files.readString(java.nio.file.Paths.get(f))
+      """case\s+class\s+(\w+)[^(]*\(""".r.findAllMatchIn(src).toList.flatMap { m =>
+        var (depth, i) = (1, m.end)
+        while (depth > 0 && i < src.length) {
+          if (src(i) == '(') depth += 1 else if (src(i) == ')') depth -= 1
+          i += 1
+        }
+        if (src.substring(m.end, i).contains("Array[")) Some(m.group(1)) else None
+      }
+    }
+
+  test("no Array-typed constructor argument on a case class under src/main/scala/graft/functions") {
+    val offenders = arrayArgCaseClasses("src/main/scala/graft/functions")
+    assert(offenders.isEmpty,
+      "an array compares by identity, so two equal expressions never semanticEquals " +
+        s"and exchange reuse misses them; take an immutable Seq: $offenders")
+  }
 }
