@@ -60,6 +60,29 @@ object Bench {
     spark
   }
 
+  /** Per rule name, (time ns, runs, effective runs) so far in Spark's
+    * JVM-wide rule metering, parsed from `RuleExecutor.dumpTimeSpent`,
+    * its one public per-rule reader.
+    */
+  def ruleMetering(): Map[String, (Long, Long, Long)] = {
+    val row = """(\S+)\s+\d+ / (\d+)\s+(\d+) / (\d+)""".r
+    org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent().linesIterator
+      .map(_.trim).collect { case row(rule, ns, eff, runs) =>
+        rule -> ((ns.toLong, runs.toLong, eff.toLong))
+      }.toMap
+  }
+
+  /** Optimizer ms per `graft.plans` rule that changed a plan between
+    * two [[ruleMetering]] readings, keyed by the rule's simple name.
+    */
+  private def graftRuleMs(before: Map[String, (Long, Long, Long)],
+                          after: Map[String, (Long, Long, Long)]): Map[String, Double] =
+    after.collect {
+      case (rule, (ns, _, eff)) if rule.startsWith("graft.plans.") &&
+          eff > before.get(rule).fold(0L)(_._3) =>
+        rule.stripPrefix("graft.plans.") -> (ns - before.get(rule).fold(0L)(_._1)) / 1e6
+    }
+
   /** PIDs of java processes that are neither this JVM, its ancestors
     * (the sbt launcher), nor its descendants — i.e. a co-resident
     * Verify/test JVM whose compile or GC activity would contaminate
@@ -184,6 +207,10 @@ object Bench {
         .count(_.matches("cpu\\d+ .*")) max 1
       catch { case _: Throwable => Runtime.getRuntime.availableProcessors() }
     val ambientShare = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // Per-query optimizer ms of each graft.plans rule that fired in the
+    // recorded run: a delta of Spark's rule metering, read outside the
+    // timed window
+    val ruleMs = scala.collection.mutable.LinkedHashMap[String, Map[String, Double]]()
     var foreignJiffies = 0L
     var stealJiffies = 0L
     // Min of repeated timed runs per query: a one-shot measurement is
@@ -198,17 +225,20 @@ object Bench {
       if (streamOnly) Seq.empty
       else if (queryArgs.isEmpty) SparkEntry.queries.toSeq
       else SparkEntry.queries.filter { case (k, _) => queryArgs.contains(k) }.toSeq
-    // returns (wall sec, foreign-CPU share of the window): share =
-    // (Δbusy − Δself) / (wall · Hz · cpus) — 0 when /proc is absent
-    def timed(name: String,
-              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
+    // returns (wall sec, foreign-CPU share of the window, graft rule
+    // ms): share = (Δbusy − Δself) / (wall · Hz · cpus) — 0 when /proc
+    // is absent
+    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : (Double, Double, Map[String, Double]) = {
       org.apache.spark.GraftSparkGlue.drainListenerBus(spark.sparkContext)
+      val rules0 = ruleMetering()
       val s0 = shuffleBytes.get
       val (b0, st0, self0) = procCpuSample()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       val dt = (System.nanoTime() - t0) / 1e9
       val (b1, st1, self1) = procCpuSample()
+      val rules = graftRuleMs(rules0, ruleMetering())
       org.apache.spark.GraftSparkGlue.drainListenerBus(spark.sparkContext)
       // bytes are deterministic run to run (unlike wall time) — the
       // last run's delta is the recorded figure
@@ -224,7 +254,7 @@ object Bench {
           stealJiffies += math.max(0L, st1 - st0)
           foreign / (dt * Hz * nCpus)
         }
-      (dt, share)
+      (dt, share, rules)
     }
     // Two FULL sweeps rather than same-query back-to-back repeats: by
     // the time the recorded second sweep starts, every family's
@@ -233,7 +263,7 @@ object Bench {
     // absorb. Back-to-back min-of-2 left 2-4 movers per bench pair from
     // exactly that class; two sweeps is the same total work, ordered so
     // sweep 2 measures a uniformly warm JVM.
-    val sweep1 = scala.collection.mutable.Map[String, (Double, Double)]()
+    val sweep1 = scala.collection.mutable.Map[String, (Double, Double, Map[String, Double])]()
     selected.sortBy(_._1).foreach { case (name, fn) =>
       try sweep1(name) = timed(name, fn)
       catch {
@@ -260,6 +290,7 @@ object Bench {
           // the ambient stamp that matters is the one on the RECORDED
           // (min) run — a clean min makes slower contaminated runs moot
           ambientShare(name) = best._2
+          if (best._3.nonEmpty) ruleMs(name) = best._3
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -393,6 +424,10 @@ object Bench {
       .map(k => "\"" + k + f"""\":${shuffles.getOrElse(k, 0L) / 1048576.0}%.2f""")
       .mkString("{", ",", "}")
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val rm = ruleMs.map { case (q, rules) =>
+      "\"" + q + "\":" + rules.toSeq.sorted
+        .map { case (r, ms) => "\"" + r + "\":" + f"$ms%.1f" }.mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
     val total = timings.values.sum
     // Re-sample the foreign-JVM check AFTER the sweeps: a Verify/test
     // JVM that started mid-bench contaminates timings exactly like one
@@ -414,7 +449,7 @@ object Bench {
         f""","ambient":{"cpus":$nCpus,"foreign_cpu_sec":${foreignJiffies / Hz}%.1f,"steal_sec":${stealJiffies / Hz}%.1f,"flagged":$flagged}"""
       }
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"shuffle_mb":$sh,"failed":$fs,"sf":"$sfDir"$cont$ambientJson$streamJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"shuffle_mb":$sh,"graft_rule_ms":$rm,"failed":$fs,"sf":"$sfDir"$cont$ambientJson$streamJson}"""
     println(json)
     // The full line above is the contract record (and lands verbatim in
     // BENCH_LAST.json), but at 274 queries it runs ~8 KB — longer than

@@ -78,10 +78,12 @@ object SparkEntry {
     // purpose: plans.EditDistanceJoinRewrite turns the O(N²)
     // nested-loop join into the PassJoin blocked plan transparently —
     // this row proves the production path end to end (same oracle SQL,
-    // same result multiset as the hand-blocked operator)
-    "dedup_edit_distance_sql" -> ((s: SparkSession, d: String) => {
-      graft.Sql.registerAll(s, d)
-      s.sql(
+    // same result multiset as the hand-blocked operator). Sql.query
+    // registers only the view the statement reads (documents), and the
+    // rule builds the blocked plan from Catalyst nodes, with no
+    // analyzer pass inside the optimizer
+    "dedup_edit_distance_sql" -> ((s: SparkSession, d: String) =>
+      graft.Sql.query(s, d,
         """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                   CAST(levenshtein(substring(a.text, 101, 48),
                                    substring(b.text, 101, 48)) AS BIGINT) AS dist
@@ -90,26 +92,24 @@ object SparkEntry {
                             substring(b.text, 101, 48)) <= 2
            WHERE a.doc_id < b.doc_id
              AND length(substring(a.text, 101, 48)) > 2
-             AND length(substring(b.text, 101, 48)) > 2""")
-    }),
+             AND length(substring(b.text, 101, 48)) > 2""")),
     // the naive JW-threshold SQL a user actually writes; the
     // JaroWinklerThresholdRewrite rule fuses predicate + score into the
     // single-pass jaro_winkler_gte kernel (histogram prefilter) and
     // SimJoinParallelize repartitions the streamed side so the nested
     // loop uses all cores — blocking was measured as a dead end
     // (PlanLintSpec allows the NL by design; this row hash-proves the
-    // fused plan against DuckDB's brute force, DOUBLE scores raw)
-    "er_jaro_winkler_sql" -> ((s: SparkSession, d: String) => {
-      graft.Sql.registerAll(s, d)
-      s.sql(
+    // fused plan against DuckDB's brute force, DOUBLE scores raw);
+    // Sql.query registers only the view the statement reads (documents)
+    "er_jaro_winkler_sql" -> ((s: SparkSession, d: String) =>
+      graft.Sql.query(s, d,
         """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                   jaro_winkler(substring(a.text, 1, 64),
                                substring(b.text, 1, 64)) AS jw
            FROM documents a JOIN documents b
              ON jaro_winkler(substring(a.text, 1, 64),
                              substring(b.text, 1, 64)) >= 0.94
-           WHERE a.doc_id < b.doc_id""")
-    }),
+           WHERE a.doc_id < b.doc_id""")),
     "dedup_minhash"          -> Dedup.minhashLsh _,
     "dedup_minhash_portable" -> Dedup.minhashPortable _,
     // the xxh64 simhash fast path (Dedup.simhash) is library API but

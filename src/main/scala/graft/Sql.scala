@@ -1,11 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftGlue, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Pure-SQL surface: register every testdata table as a temp view (and
-  * the graft native functions via [[GraftExtensions.register]]), so the
+/** Pure-SQL surface: register testdata tables as temp views (and the
+  * graft native functions via [[GraftExtensions.register]]), so the
   * whole engine is usable from `spark.sql(...)` alone — the interface a
   * reference user migrating hand-written jobs to SQL would reach for.
+  * [[registerAll]] registers every table; [[query]] only the tables one
+  * statement reads.
   */
 object Sql {
 
@@ -13,17 +17,46 @@ object Sql {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  private def register(spark: SparkSession, dir: String, t: String): Unit = t match {
+    case "events" => Tables.events(spark, dir).createOrReplaceTempView("events")
+    case _        => Tables.table(spark, dir, t).createOrReplaceTempView(t)
+  }
+
   /** Create/replace temp views over `dir` + install the native
     * functions and optimizer rules on the session.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
-    tableNames.foreach {
-      case "events" =>
-        Tables.events(spark, dir).createOrReplaceTempView("events")
-      case t =>
-        Tables.table(spark, dir, t).createOrReplaceTempView(t)
-    }
+    tableNames.foreach(register(spark, dir, _))
     GraftExtensions.register(spark)
+  }
+
+  /** `spark.sql(statement)` after registering only the testdata tables
+    * the statement names (every open reads a parquet footer and
+    * resolves a data source on the driver) and installing the native
+    * functions and optimizer rules. A table counts as named when a
+    * single-part relation name of the parsed statement, in any subquery
+    * or CTE body, equals it case-insensitively; a CTE that shadows a
+    * table name registers that table needlessly but harmlessly.
+    */
+  def query(spark: SparkSession, dir: String, statement: String): DataFrame = {
+    val named = relationNames(GraftGlue.parsePlan(spark, statement)).map(_.toLowerCase).toSet
+    tableNames.filter(named).foreach(register(spark, dir, _))
+    GraftExtensions.register(spark)
+    spark.sql(statement)
+  }
+
+  /** Single-part relation names anywhere in a parsed plan: its
+    * children, CTE definitions (inner children) and expression
+    * subqueries.
+    */
+  private def relationNames(plan: LogicalPlan): Seq[String] = {
+    val here = plan match {
+      case r: UnresolvedRelation if r.multipartIdentifier.size == 1 => r.multipartIdentifier
+      case _                                                       => Nil
+    }
+    val nested = plan.children ++ plan.subqueries ++
+      plan.innerChildren.collect { case p: LogicalPlan => p }
+    here ++ nested.flatMap(relationNames)
   }
 
   /** Additionally expose every registered query as a lazy temp view

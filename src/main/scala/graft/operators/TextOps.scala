@@ -533,28 +533,44 @@ object TextOps {
     * DuckDB recursive replay `bpe_encode` uses.
     */
   def bpeTrain(spark: SparkSession, dir: String, rounds: Int = 3): Seq[(Int, String, String, Long)] =
-    bpeTrainState(spark, dir, rounds)._1
+    bpeModel(spark, dir).merges(rounds)
 
-  private[graft] val bpeMemo =
-    new SessionMemo[Int, (Seq[(Int, String, String, Long)], DataFrame)]
-
-  /** The merge sequence plus the (word, wcnt) vocabulary it was
-    * trained on, memoized per (application, corpus, rounds)
-    * ([[graft.SessionMemo]]): [[bpeTrain]], [[bpeTrainTable]],
-    * [[bpeVocab]] and [[bpeEncode]] share one training loop. The
-    * vocabulary is an eager localCheckpoint (a lineage-free
-    * block-manager RDD, not a catalog cache entry, so a harness
-    * `clearCache()` between queries can't invalidate it).
+  /** One corpus's BPE training state: the (word, wcnt) vocabulary and
+    * the longest greedy merge list trained on it so far. Greedy merges
+    * are deterministic, so the first `r` merges of any longer list are
+    * the `r`-round training: a request for more rounds than trained
+    * runs only the missing ones, and a list that stopped short because
+    * the pairs ran out is final.
     */
-  private def bpeTrainState(spark: SparkSession, dir: String,
-      rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) =
-    bpeMemo.getOrBuild(spark, dir, rounds) {
-      val vocab = Tables.documentsSpread(spark, dir)
+  private[graft] final case class BpeModel(vocab: DataFrame) {
+    private var trained = Vector.empty[(Int, String, String, Long)]
+    private var exhausted = false
+
+    def merges(rounds: Int): Seq[(Int, String, String, Long)] = synchronized {
+      if (trained.size < rounds && !exhausted) {
+        trained = bpeMerges(vocab, rounds, trained)
+        exhausted = trained.size < rounds
+      }
+      trained.take(rounds)
+    }
+  }
+
+  private[graft] val bpeMemo = new SessionMemo[Unit, BpeModel]
+
+  /** The BPE model of a corpus, memoized per (application, corpus)
+    * ([[graft.SessionMemo]]): [[bpeTrain]], [[bpeTrainTable]],
+    * [[bpeVocab]] and [[bpeEncode]] share one vocabulary and one
+    * training loop at every round count. The vocabulary is an eager
+    * localCheckpoint (a lineage-free block-manager RDD, not a catalog
+    * cache entry, so a harness `clearCache()` between queries can't
+    * invalidate it).
+    */
+  private def bpeModel(spark: SparkSession, dir: String): BpeModel =
+    bpeMemo.getOrBuild(spark, dir, ()) {
+      BpeModel(Tables.documentsSpread(spark, dir)
         .select(explode(tokens(col("text"))).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
-        .localCheckpoint(true)
-      try (bpeMerges(vocab, rounds), vocab)
-      catch { case e: Throwable => SessionMemo.release(vocab); throw e }
+        .localCheckpoint(true))
     }
 
   /** Up to `rounds` greedy merges over `vocab`, one `head()` each;
@@ -562,7 +578,7 @@ object TextOps {
     */
   @scala.annotation.tailrec
   private def bpeMerges(vocab: DataFrame, rounds: Int,
-      merges: Vector[(Int, String, String, Long)] = Vector.empty): Seq[(Int, String, String, Long)] =
+      merges: Vector[(Int, String, String, Long)] = Vector.empty): Vector[(Int, String, String, Long)] =
     if (merges.size == rounds) merges
     else {
       // Best pair = (cnt desc, l asc, r asc) as ONE scalar aggregate:
@@ -615,9 +631,10 @@ object TextOps {
     * corpus scale.
     */
   def bpeVocab(spark: SparkSession, dir: String, rounds: Int = 8): DataFrame = {
-    val (merges, vocab) = bpeTrainState(spark, dir, rounds)
-    vocab
-      .select(explode(bpe_pieces(col("word"), mergePairs(merges))).as("piece"), col("wcnt"))
+    val model = bpeModel(spark, dir)
+    model.vocab
+      .select(explode(bpe_pieces(col("word"), mergePairs(model.merges(rounds)))).as("piece"),
+        col("wcnt"))
       .groupBy(col("piece"))
       .agg(sum(col("wcnt")).as("freq"))
   }
@@ -772,7 +789,7 @@ object TextOps {
     new SessionMemo[(Int, Int, Int), (DataFrame, DataFrame)]
 
   /** [[unigramState]] memoized per (application, corpus, params) in a
-    * [[graft.SessionMemo]], like [[bpeTrainState]]: one EM loop
+    * [[graft.SessionMemo]], like [[bpeModel]]: one EM loop
     * per corpus, the final vocab and segmentation pinned as eager
     * localCheckpoints, the intermediate occurrence cache released.
     */

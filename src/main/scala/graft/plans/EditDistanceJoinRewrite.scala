@@ -1,12 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftGlue, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.Max
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Optimizer rule: rewrite a naive edit-distance similarity join
   *
@@ -128,85 +126,84 @@ object EditDistanceJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   private def rewrite(left: LogicalPlan, right: LogicalPlan,
                       ls: Expression, rs: Expression, k: Int,
                       rest: Seq[Expression]): LogicalPlan = {
-    val spark = SparkSession.active
-    // segment layout for a window of length L (same convention as
-    // Dedup.editDistanceJoin: the first L % (k+1) segments get the
-    // extra char)
-    def segLen(l: Column, i: Column): Column =
-      (floor(l / (k + 1)) + when(i < l % (k + 1), 1).otherwise(0)).cast("int")
-    def segStart(l: Column, i: Column): Column =
-      (i * floor(l / (k + 1)) + least(i, l % (k + 1))).cast("int")
+    // segment layout for a window of length l >= 0 (same convention as
+    // Dedup.editDistanceJoin: the first l % (k+1) segments get the
+    // extra char), in integer arithmetic: l div (k+1) is floor(l / (k+1))
+    val parts = Literal(k + 1)
+    def base(l: Expression): Expression =
+      Cast(IntegralDivide(Cast(l, LongType), Literal((k + 1).toLong)), IntegerType)
+    def segLen(l: Expression, i: Expression): Expression =
+      Add(base(l), If(LessThan(i, Remainder(l, parts)), Literal(1), Literal(0)))
+    def segStart(l: Expression, i: Expression): Expression =
+      Add(Multiply(i, base(l)), Least(Seq(i, Remainder(l, parts))))
 
-    // working columns are __graft-prefixed so user schemas can't
+    // The two sides are built as resolved Catalyst nodes, like the
+    // dedup/verify tail below: a Dataset built here would run a full
+    // analyzer pass per step inside every optimization of the query.
+    // Working columns are __graft-prefixed so user schemas can't
     // collide; the pair ids exist only to dedupe multi-segment matches
-    // of the same row pair and never reach the output
-    val segs = GraftGlue.ofRows(spark, left)
-      .withColumn("__graft_edj_idl", monotonically_increasing_id())
-      .withColumn("__graft_edj_sl", GraftGlue.column(ls))
-      .withColumn("__graft_edj_la",
-        length(col("__graft_edj_sl")).cast("int"))
-      .withColumn("__graft_edj_i", explode(sequence(lit(0), lit(k))))
-      .withColumn("__graft_edj_seg", col("__graft_edj_sl").substr(
-        segStart(col("__graft_edj_la"), col("__graft_edj_i")) + 1,
-        segLen(col("__graft_edj_la"), col("__graft_edj_i"))))
+    // of the same row pair and never reach the output.
+    def extend(child: LogicalPlan, cols: (String, Expression)*): (LogicalPlan, Seq[Attribute]) = {
+      val aliases = cols.map { case (n, e) => Alias(e, Tag + n)() }
+      (Project(child.output ++ aliases, child), aliases.map(_.toAttribute))
+    }
+    def explode(child: LogicalPlan, name: String, values: Seq[Expression]): (LogicalPlan, Attribute) = {
+      val array = CreateArray(values)
+      val out = AttributeReference(Tag + name, IntegerType, array.dataType.containsNull)()
+      (Generate(Explode(array), Nil, outer = false, None, Seq(out), child), out)
+    }
+    def offsets(from: Int): Seq[Expression] = (from to k).map(Literal(_))
 
-    val probes = GraftGlue.ofRows(spark, right)
-      .withColumn("__graft_edj_idr", monotonically_increasing_id())
-      .withColumn("__graft_edj_sr", GraftGlue.column(rs))
-      .withColumn("__graft_edj_lr",
-        length(col("__graft_edj_sr")).cast("int"))
-      .withColumn("__graft_edj_la",
-        explode(sequence(col("__graft_edj_lr") - k, col("__graft_edj_lr") + k)))
-      .filter(col("__graft_edj_la") >= 0)
-      .withColumn("__graft_edj_i", explode(sequence(lit(0), lit(k))))
-      .withColumn("__graft_edj_shift", explode(sequence(lit(-k), lit(k))))
-      .withColumn("__graft_edj_pos",
-        segStart(col("__graft_edj_la"), col("__graft_edj_i")) + col("__graft_edj_shift"))
-      .withColumn("__graft_edj_len",
-        segLen(col("__graft_edj_la"), col("__graft_edj_i")))
-      .filter(col("__graft_edj_pos") >= 0 &&
-        col("__graft_edj_pos") + col("__graft_edj_len") <= col("__graft_edj_lr"))
-      .withColumn("__graft_edj_seg",
-        col("__graft_edj_sr").substr(col("__graft_edj_pos") + 1, col("__graft_edj_len")))
+    val (segBase, Seq(idl, sl)) =
+      extend(left, "idl" -> MonotonicallyIncreasingID(), "sl" -> ls)
+    val (segLa, Seq(la)) = extend(segBase, "la" -> Length(sl))
+    val (segI, i) = explode(segLa, "i", offsets(0))
+    val (segs, Seq(seg)) = extend(segI,
+      "seg" -> Substring(sl, Add(segStart(la, i), Literal(1)), segLen(la, i)))
+
+    val (probeBase, Seq(idr, sr)) =
+      extend(right, "idr" -> MonotonicallyIncreasingID(), "sr" -> rs)
+    val (probeLr, Seq(lr)) = extend(probeBase, "lr" -> Length(sr))
+    val (probeLa, pla) = explode(probeLr, "la", offsets(-k).map(Add(lr, _)))
+    val (probeI, pi) =
+      explode(Filter(GreaterThanOrEqual(pla, Literal(0)), probeLa), "i", offsets(0))
+    val (probeShift, shift) = explode(probeI, "shift", offsets(-k))
+    val (probeWin, Seq(pos, len)) = extend(probeShift,
+      "pos" -> Add(segStart(pla, pi), shift), "len" -> segLen(pla, pi))
+    val (probes, Seq(pseg)) = extend(
+      Filter(And(GreaterThanOrEqual(pos, Literal(0)), LessThanOrEqual(Add(pos, len), lr)),
+        probeWin),
+      "seg" -> Substring(sr, Add(pos, Literal(1)), len))
 
     // ONE dedup stage, at the pair level, via an explicit Aggregate (a
     // Deduplicate node emitted this late in optimization would never
     // be lowered); grouping keys are ONLY the narrow pair identity —
     // the two row ids — duplicates differ only in the segment
     // machinery, so the exprId-pinned max() payload carry is
-    // value-deterministic and float-bit-exact; see [[SimJoinSupport]]
-    // for why the tail is raw un-reanalyzed Catalyst. Probe-side
-    // duplicates (a row's ±shift substrings coinciding, ~75 raw vs
-    // ~45 distinct keys) are NOT pre-deduped: that aggregate's groups
-    // are near-unique, so its map-side partial collapses nothing and
-    // the whole payload-carrying probe frame would cross one EXTRA
+    // value-deterministic and float-bit-exact; see [[SimJoinSupport]].
+    // Probe-side duplicates (a row's ±shift substrings coinciding, ~75
+    // raw vs ~45 distinct keys) are NOT pre-deduped: that aggregate's
+    // groups are near-unique, so its map-side partial collapses nothing
+    // and the whole payload-carrying probe frame would cross one EXTRA
     // exchange — measured 28.8 MB vs 8 MB shuffled and +0.5 s at
     // sf0.1 for the wide-payload self-join — while the pair dedup
     // absorbs the extra join multiplicity in its map-side partial.
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-    import SimJoinSupport.{dedupOn, nameAttr, outAttr}
-
-    val joined = segs
-      .join(probes, Seq("__graft_edj_la", "__graft_edj_i", "__graft_edj_seg"))
-    val joinedPlan = GraftGlue.analyzed(joined)
+    val joined = Join(segs, probes, Inner,
+      Some(And(And(EqualTo(la, pla), EqualTo(i, pi)), EqualTo(seg, pseg))), JoinHint.NONE)
     // remaining original conjuncts run BELOW the pair dedup: they are
     // deterministic functions of columns the dedup preserves, so
     // filter-then-dedup ≡ dedup-then-filter — and for the canonical
     // self-join shape (`... AND a.id < b.id`) the early filter halves
     // the pair-dedup input and the exact levenshtein verifies only the
     // kept orientation
-    val withRest =
-      if (rest.isEmpty) joinedPlan else Filter(rest.reduce(And), joinedPlan)
-    val slA = nameAttr(joinedPlan, "__graft_edj_sl")
-    val srA = nameAttr(joinedPlan, "__graft_edj_sr")
-    val deduped = dedupOn(withRest,
-      Seq(nameAttr(joinedPlan, "__graft_edj_idl"), nameAttr(joinedPlan, "__graft_edj_idr")),
-      Seq(slA, srA) ++ (left.output ++ right.output).map(outAttr(joinedPlan, _)))
+    val withRest = if (rest.isEmpty) joined else Filter(rest.reduce(And), joined)
+    val deduped = SimJoinSupport.dedupOn(withRest, Seq(idl, idr),
+      Seq(sl, sr) ++ left.output ++ right.output)
     // banded verify: the 3-arg thresholded levenshtein early-exits at
     // k+1 (O(k·n) per pair instead of O(n·m)); result is the distance
     // when ≤ k, -1 otherwise, so `>= 0` is exactly `distance <= k`
     val verified = Filter(
-      GreaterThanOrEqual(Levenshtein(slA, srA, Some(Literal(k))), Literal(0)),
+      GreaterThanOrEqual(Levenshtein(sl, sr, Some(Literal(k))), Literal(0)),
       deduped)
     Project(left.output ++ right.output, verified)
   }

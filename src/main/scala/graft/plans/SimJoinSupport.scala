@@ -19,11 +19,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
   *    (NormalizeFloatingNumbers rewrites grouping/join/window keys,
   *    not aggregate inputs), so the rewritten join emits bit-identical
   *    DOUBLE/FLOAT values to the join it replaces.
-  *  - the tail is built as raw Catalyst nodes and NOT re-analyzed: a
-  *    fresh analyzer pass regenerates same-id aliases, which would
-  *    orphan the parent plan's references to the join's output.
-  *    Attributes are located by exprId with a loud failure if an
-  *    analysis step dropped them.
+  *  - the whole rewrite is built as resolved Catalyst nodes and NOT
+  *    analyzed: a fresh analyzer pass regenerates same-id aliases,
+  *    which would orphan the parent plan's references to the join's
+  *    output, and costs a full pass per Dataset step inside every
+  *    optimization of the query.
   */
 private[plans] object SimJoinSupport {
 
@@ -32,14 +32,6 @@ private[plans] object SimJoinSupport {
     */
   def orderableOutput(plan: LogicalPlan): Boolean =
     plan.output.forall(a => RowOrdering.isOrderable(a.dataType))
-
-  def outAttr(p: LogicalPlan, a: Attribute): Attribute =
-    p.output.find(_.exprId == a.exprId).getOrElse(
-      throw new IllegalStateException(s"carried column ${a.name}#${a.exprId.id} lost"))
-
-  def nameAttr(p: LogicalPlan, n: String): Attribute =
-    p.output.find(_.name == n).getOrElse(
-      throw new IllegalStateException(s"working column $n lost"))
 
   /** Aggregate grouping on `keys`, carrying `payload` as exprId-pinned
     * max() aliases.

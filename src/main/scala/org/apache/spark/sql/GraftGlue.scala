@@ -27,14 +27,10 @@ object GraftGlue {
   def wrongNumArgs(fn: String, expected: Int, actual: Int): Throwable =
     errors.QueryCompilationErrors.wrongNumArgsError(fn, Seq(expected), actual)
 
-  /** Wrap a (resolved) logical plan as a DataFrame — the door optimizer
-    * rules use to rebuild a subtree with the public Dataset API instead
-    * of hand-assembling catalyst nodes. `private[sql]` in Spark, hence
-    * surfaced here.
-    */
-  def ofRows(spark: SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** The parsed, unresolved plan of a SQL statement; runs no analyzer. */
+  def parsePlan(spark: SparkSession,
+                sqlText: String): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    spark.sessionState.sqlParser.parsePlan(sqlText)
 
   /** The analyzed (resolved) logical plan of a DataFrame. */
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

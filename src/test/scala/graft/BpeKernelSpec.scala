@@ -48,38 +48,47 @@ class BpeKernelSpec extends AnyFunSuite with SparkFixture {
     assert(enc === rows.toSeq.flatMap(_.getSeq[String](1)))
   }
 
-  test("one more training round adds one head()'s jobs to the memo build, and no count job") {
-    import spark.implicits._
-    val dir = scratchDir("graft-bpe-jobs")
+  /** A two-document corpus with pairs left for more than 8 merges. */
+  private def bpeCorpus(prefix: String): String = {
+    val sess = spark
+    import sess.implicits._
+    val dir = scratchDir(prefix)
     Seq((1L, "abab abc abab lowest"), (2L, "abab abc cc lower low"))
       .map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
 
+  /** Per job `body` submits, in submission order, the call site of
+    * the action that ran it (its SQL execution's description, as
+    * `head at TextOps.scala:123`; AQE submits a query's stages from
+    * other threads, so their own call sites name no action).
+    */
+  private def jobSites(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
-    /** Per job `body` submits, in submission order, the call site of
-      * the action that ran it (its SQL execution's description, as
-      * `head at TextOps.scala:123`; AQE submits a query's stages from
-      * other threads, so their own call sites name no action).
-      */
-    def jobSites(body: => Unit): Seq[String] = {
-      val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      val actions = new java.util.concurrent.ConcurrentHashMap[String, String]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          jobs.put(e.jobId, String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
-        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-          case s: SparkListenerSQLExecutionStart => actions.put(s.executionId.toString, s.description)
-          case _ => ()
-        }
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val actions = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => actions.put(s.executionId.toString, s.description)
+        case _ => ()
       }
-      assert(org.apache.spark.GraftSparkGlue.drainListenerBus(sc))
-      sc.addSparkListener(listener)
-      try { body; assert(org.apache.spark.GraftSparkGlue.drainListenerBus(sc)) }
-      finally sc.removeSparkListener(listener)
-      import scala.jdk.CollectionConverters._
-      jobs.asScala.toSeq.sortBy(_._1).map { case (_, x) => actions.asScala.getOrElse(x, s"execution $x") }
     }
+    assert(org.apache.spark.GraftSparkGlue.drainListenerBus(sc))
+    sc.addSparkListener(listener)
+    try { body; assert(org.apache.spark.GraftSparkGlue.drainListenerBus(sc)) }
+    finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq.sortBy(_._1).map { case (_, x) => actions.asScala.getOrElse(x, s"execution $x") }
+  }
+
+  private def heads(s: Seq[String]) = s.filter(_.startsWith("head at "))
+
+  test("one more training round adds one head()'s jobs to the memo build, and no count job") {
+    val dir = bpeCorpus("graft-bpe-jobs")
     def build(rounds: Int): (Seq[(Int, String, String, Long)], Seq[String]) = {
       TextOps.bpeMemo.clear()
       var merges = Seq.empty[(Int, String, String, Long)]
@@ -93,7 +102,6 @@ class BpeKernelSpec extends AnyFunSuite with SparkFixture {
     assert(m3.size === r && m4.size === r + 1, "every round found a pair")
     assert(m4.take(r) === m3)
 
-    def heads(s: Seq[String]) = s.filter(_.startsWith("head at "))
     assert(s3.forall(!_.startsWith("count at")) && s4.forall(!_.startsWith("count at")),
       s"count jobs in a memo build: $s3 / $s4")
     assert(heads(s3).nonEmpty && heads(s3).size % r === 0, s"jobs of $r rounds: $s3")
@@ -101,5 +109,32 @@ class BpeKernelSpec extends AnyFunSuite with SparkFixture {
       s"round ${r + 1} submitted more than one head()'s jobs: $s3 -> $s4")
     assert(s4.filterNot(_.startsWith("head at ")) === s3.filterNot(_.startsWith("head at ")),
       "the vocabulary checkpoint's jobs do not depend on the round count")
+  }
+
+  test("bpe_train after bpe_encode trains only the 5 missing rounds on the same vocabulary") {
+    val dir = bpeCorpus("graft-bpe-extend")
+    TextOps.bpeMemo.clear()
+    val encode = jobSites(SparkEntry.queries("bpe_encode")(spark, dir))
+    var train: Seq[(Long, String, String, Long)] = Nil
+    val extend = jobSites {
+      train = SparkEntry.queries("bpe_train")(spark, dir).collect().toSeq
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+    }
+    TextOps.bpeMemo.clear()
+    val fresh = TextOps.bpeTrain(spark, dir, 8)
+    TextOps.bpeMemo.clear()
+
+    // bpe_encode trains 3 rounds: its checkpoint jobs and one head() per round
+    val perRound = heads(encode).size / 3
+    assert(perRound > 0 && heads(encode).size === 3 * perRound, s"bpe_encode's jobs: $encode")
+    val checkpoint = encode.filterNot(_.startsWith("head at "))
+    assert(checkpoint.nonEmpty, s"bpe_encode built no vocabulary: $encode")
+    // bpe_train: no second vocabulary, rounds 4-8 only, then its own
+    // collect of the merge table
+    val trainJobs = extend.filterNot(_.startsWith("collect at "))
+    assert(trainJobs.forall(_.startsWith("head at ")), s"a second vocabulary build: $extend")
+    assert(heads(trainJobs).size === 5 * perRound, s"bpe_train's rounds: $extend")
+    assert(fresh.size === 8 && train.sortBy(_._1) ===
+      fresh.map { case (k, l, r, c) => (k.toLong, l, r, c) })
   }
 }

@@ -112,6 +112,23 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
       rows.count { case (_, s) => s != null }) // every non-null row self-matches
   }
 
+  test("EditDistanceJoinRewrite builds its blocked plan without running the analyzer") {
+    // Spark's rule metering is JVM-wide: reset it, optimize the analyzed
+    // plan of the registered SQL row once, and read the per-rule runs
+    val analyzed = SparkEntry.queries("dedup_edit_distance_sql")(spark, fixtureDir)
+      .queryExecution.analyzed
+    org.apache.spark.sql.catalyst.rules.RuleExecutor.resetMetrics()
+    val optimized = spark.sessionState.optimizer.execute(analyzed)
+    val metering = Bench.ruleMetering()
+    assert(optimized.toString.contains("__graft_edj_seg"), "the rule did not fire")
+    assert(metering.get("graft.plans.EditDistanceJoinRewrite").map(_._3) === Some(1L))
+    val analyzerRuns = metering.collect {
+      case (rule, (_, runs, _)) if rule.contains(".Analyzer$") => rule -> runs
+    }
+    assert(analyzerRuns.isEmpty, s"${analyzerRuns.size} analyzer rules ran inside the " +
+      s"optimizer, ${analyzerRuns.values.sum} times: ${analyzerRuns.keys.take(3)}")
+  }
+
   test("JaroWinklerThresholdRewrite: jw threshold predicates fuse into the gte kernel") {
     val sess = spark
     import sess.implicits._

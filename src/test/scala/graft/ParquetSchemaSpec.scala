@@ -92,6 +92,8 @@ class ParquetSchemaSpec extends AnyFunSuite with SparkFixture {
     try {
       Sql.tableNames.foreach(t => Tables.table(spark, dir, t).schema)
       Sql.registerAll(spark, dir)
+      Sql.query(spark.newSession(), dir,
+        "SELECT count(*) FROM documents d JOIN events e ON d.doc_id = e.user_id")
       Tables.parquet(spark, s"$foreignDir/lineitem.parquet")
       assert(org.apache.spark.GraftSparkGlue.drainListenerBus(sc))
     } finally sc.removeSparkListener(listener)

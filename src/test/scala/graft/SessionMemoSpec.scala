@@ -173,6 +173,14 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
     assert(offenders.isEmpty, s"no second diagnostic main: $offenders")
   }
 
+  test("no optimizer rule under src/main/scala/graft/plans builds a Dataset") {
+    val offenders = filesMatching("""ofRows\(|withColumn\(|GraftGlue\.analyzed\(""", "",
+      "src/main/scala/graft/plans")
+    assert(offenders.isEmpty,
+      "build rewritten subtrees as resolved Catalyst nodes: a Dataset step runs a full " +
+        s"analyzer pass inside every optimization of the query: $offenders")
+  }
+
   /** The `conf.set` calls allowed under src/main/scala, by (file, key).
     * An operator that sets a session conf changes every later query of
     * its caller; a per-read or per-write option does not.

@@ -34,6 +34,31 @@ class SqlSurfaceSpec extends AnyFunSuite with SparkFixture {
     assert(dups === 3L) // (0,1), (0,4), (1,4): same token multisets
   }
 
+  test("Sql.query registers only the testdata tables its statement reads") {
+    def views(s: org.apache.spark.sql.SparkSession): Set[String] =
+      s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    for (row <- Seq("dedup_edit_distance_sql", "er_jaro_winkler_sql")) {
+      val fresh = spark.newSession()
+      SparkEntry.queries(row)(fresh, fixtureDir)
+      assert(views(fresh) === Set("documents"), row)
+    }
+    // a CTE name is not a table
+    val cte = spark.newSession()
+    assert(Sql.query(cte, fixtureDir, "WITH docs AS (SELECT 1 AS x) SELECT x FROM docs")
+      .collect().map(_.getInt(0)).toSeq === Seq(1))
+    assert(views(cte).isEmpty)
+    // CTE bodies and expression subqueries are read too, names in any case
+    val nested = spark.newSession()
+    val n = Sql.query(nested, fixtureDir,
+      """WITH o AS (SELECT o_custkey FROM ORDERS)
+         SELECT count(*) FROM o WHERE o_custkey IN (SELECT c_custkey FROM customer)""")
+      .collect().head.getLong(0)
+    assert(views(nested) === Set("orders", "customer"))
+    Sql.registerAll(spark, fixtureDir)
+    assert(n === spark.sql("SELECT count(*) FROM orders JOIN customer ON o_custkey = c_custkey")
+      .collect().head.getLong(0))
+  }
+
   test("every query is composable as a graft_<name> SQL view") {
     Sql.registerAll(spark, fixtureDir)
     Sql.registerQueryViews(spark, fixtureDir)
