@@ -362,7 +362,6 @@ object Bench {
     def inJvmStreamJson(): String =
       try {
         val tmpIn = java.nio.file.Files.createTempDirectory("graft-stream-in").toString
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // fan the events table out to many files so the 16-files-per-
         // trigger option yields several micro-batches, not one big one
         spark.read.parquet(s"$sfDir/events.parquet")

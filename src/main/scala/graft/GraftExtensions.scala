@@ -1,18 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{GraftGlue, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{GraftGlue, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 import graft.functions._
 
-/** SQL-surface registration of the graft native expressions.
-  *
-  * Config-time (new sessions): `spark.sql.extensions` set to
+/** SQL-surface registration of the graft native expressions and
+  * optimizer rules: `spark.sql.extensions` set to
   * `graft.GraftExtensions`, as [[Bench.builder]] does, after which
   * `SELECT simhash64(tokens), minhash_bands(sh, 64, 4) ...` parse like
-  * built-ins. [[GraftExtensions.register]] installs the same
-  * builders on an already-running session.
+  * built-ins. The extension is the only installer; a session built
+  * without it has neither the functions nor the rules.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -72,6 +71,13 @@ object GraftExtensions {
     // catalyst tree — Column-DSL nodes don't resolve inside a function
     // builder): SQL users write ORDER BY zorder2(a, b) for layout
     "zorder2" -> arity("zorder2", 2)(args => mortonExpr(args(0), args(1))),
+    // typed-Aggregator UDAF: k=64 Misra-Gries candidate pass, the SQL
+    // entry to the two-pass heavy-hitter pattern. Candidates are a
+    // superset of every item with frequency > N/65; re-count exactly
+    // and threshold to get a deterministic answer (TextOps
+    // .frequentTokens is that composition).
+    "mg_candidates" -> arity("mg_candidates", 1)(GraftGlue.aggregator(
+      "mg_candidates", new MisraGries(64), org.apache.spark.sql.Encoders.STRING)),
   )
 
   private def mortonExpr(a0: Expression, b0: Expression): Expression = {
@@ -86,30 +92,5 @@ object GraftExtensions {
     (0 until 16)
       .map(i => BitwiseOr(term(a, i, 0), term(b, i, 1)): Expression)
       .reduce(BitwiseOr(_, _))
-  }
-
-  /** Install the graft functions + optimizer rules on a live session. */
-  def register(spark: SparkSession): Unit = {
-    builders.foreach { case (name, builder) =>
-      GraftGlue.registerRuntimeFunction(spark, name, builder)
-    }
-    // Typed-Aggregator UDAF (runtime-registration path only — the
-    // config-time extension injects Expression builders, which an
-    // Aggregator is not): k=64 Misra-Gries candidate pass, the SQL
-    // entry to the two-pass heavy-hitter pattern. Candidates are a
-    // superset of every item with frequency > N/65; re-count exactly
-    // and threshold to get a deterministic answer (TextOps
-    // .frequentTokens is that composition).
-    spark.udf.register("mg_candidates",
-      org.apache.spark.sql.functions.udaf(
-        new graft.functions.MisraGries(64),
-        org.apache.spark.sql.Encoders.STRING))
-    Seq(graft.plans.TokenRewrite, graft.plans.EditDistanceJoinRewrite,
-        graft.plans.JaroWinklerThresholdRewrite,
-        graft.plans.SimJoinParallelize).foreach { r =>
-      if (!spark.experimental.extraOptimizations.contains(r))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ r
-    }
   }
 }

@@ -4,12 +4,13 @@ import org.apache.spark.sql.{DataFrame, GraftGlue, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Pure-SQL surface: register testdata tables as temp views (and the
-  * graft native functions via [[GraftExtensions.register]]), so the
+/** Pure-SQL surface: register testdata tables as temp views, so the
   * whole engine is usable from `spark.sql(...)` alone — the interface a
   * reference user migrating hand-written jobs to SQL would reach for.
   * [[registerAll]] registers every table; [[query]] only the tables one
-  * statement reads.
+  * statement reads. The graft native functions and optimizer rules come
+  * from the session's extension ([[GraftExtensions]], installed by
+  * [[Bench.builder]]), the only installer; nothing here adds them.
   */
 object Sql {
 
@@ -22,26 +23,20 @@ object Sql {
     case _        => Tables.table(spark, dir, t).createOrReplaceTempView(t)
   }
 
-  /** Create/replace temp views over `dir` + install the native
-    * functions and optimizer rules on the session.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit = {
+  /** Create/replace temp views over `dir`. */
+  def registerAll(spark: SparkSession, dir: String): Unit =
     tableNames.foreach(register(spark, dir, _))
-    GraftExtensions.register(spark)
-  }
 
   /** `spark.sql(statement)` after registering only the testdata tables
     * the statement names (every open reads a parquet footer and
-    * resolves a data source on the driver) and installing the native
-    * functions and optimizer rules. A table counts as named when a
-    * single-part relation name of the parsed statement, in any subquery
-    * or CTE body, equals it case-insensitively; a CTE that shadows a
-    * table name registers that table needlessly but harmlessly.
+    * resolves a data source on the driver). A table counts as named
+    * when a single-part relation name of the parsed statement, in any
+    * subquery or CTE body, equals it case-insensitively; a CTE that
+    * shadows a table name registers that table needlessly but harmlessly.
     */
   def query(spark: SparkSession, dir: String, statement: String): DataFrame = {
     val named = relationNames(GraftGlue.parsePlan(spark, statement)).map(_.toLowerCase).toSet
     tableNames.filter(named).foreach(register(spark, dir, _))
-    GraftExtensions.register(spark)
     spark.sql(statement)
   }
 

@@ -55,13 +55,12 @@ object Tables {
   }
 
   /** `events` with `ts` normalized to TIMESTAMP — see [[normalizeTs]].
-    * `nanosAsLong` is set defensively so a nanos-encoded regeneration
-    * of the testdata scans (as LongType) instead of failing.
+    * Every session carries `nanosAsLong` ([[Bench.builder]]), so a
+    * nanos-encoded regeneration of the testdata scans (as LongType)
+    * instead of failing.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeTs(table(s, d, "events"))
-  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

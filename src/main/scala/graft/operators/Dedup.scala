@@ -542,9 +542,9 @@ object Dedup {
     * (doc_id, comp, keep) — the registered `dedup_components_standing`
     * row hash-proves it against the same recursive-CTE oracle.
     */
-  def componentLabels(spark: SparkSession, dir: String): DataFrame = this.synchronized {
-    val (table, idxPath) = Tables.scopedIndex(spark, "graft_components_index", dir)
-    if (!spark.catalog.tableExists(table)) {
+  def componentLabels(spark: SparkSession, dir: String): DataFrame =
+    componentIndexMemo.getOrBuild(spark, dir, ()) {
+      val (table, idxPath) = Tables.scopedIndex(spark, "graft_components_index", dir)
       dedupComponents(spark, dir)
         // cluster by the bucket key before the bucketed write: without
         // it every upstream task writes a file into every bucket it
@@ -554,9 +554,17 @@ object Dedup {
         .repartition(8, col("doc_id"))
         .write.bucketBy(8, "doc_id").sortBy("doc_id")
         .option("path", idxPath).mode("overwrite").saveAsTable(table)
+      spark.table(table).select(col("doc_id"), col("comp"), col("keep"))
     }
-    spark.table(table).select(col("doc_id"), col("comp"), col("keep"))
-  }
+
+  /** The standing tables of the components lifecycle, one
+    * [[graft.SessionMemo]] each: a table is rebuilt (overwriting the
+    * same scoped name and path) when the corpus dir changes in place.
+    */
+  private[graft] val componentIndexMemo = new SessionMemo[Unit, DataFrame]
+  private val baseSignaturesMemo = new SessionMemo[Unit, (DataFrame, DataFrame, DataFrame)]
+  private val baseLabelsMemo = new SessionMemo[Unit, DataFrame]
+  private val appendV2Memo = new SessionMemo[Unit, DataFrame]
 
   /** Incremental connected components — the clustering counterpart of
     * [[dedupIncremental]]/[[minhashIncremental]]: a new ingest batch
@@ -666,11 +674,11 @@ object Dedup {
     * Returns the three read-back relations (sha index, sets, prefix).
     */
   private def standingBaseSignatures(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) = this.synchronized {
-    val (shaT, shaP) = Tables.scopedIndex(spark, "graft_components_bsha", dir)
-    val (setT, setP) = Tables.scopedIndex(spark, "graft_components_bsets", dir)
-    val (prefT, prefP) = Tables.scopedIndex(spark, "graft_components_bpref", dir)
-    if (!spark.catalog.tableExists(shaT)) {
+      dir: String): (DataFrame, DataFrame, DataFrame) =
+    baseSignaturesMemo.getOrBuild(spark, dir, ()) {
+      val (shaT, shaP) = Tables.scopedIndex(spark, "graft_components_bsha", dir)
+      val (setT, setP) = Tables.scopedIndex(spark, "graft_components_bsets", dir)
+      val (prefT, prefP) = Tables.scopedIndex(spark, "graft_components_bpref", dir)
       val base = Tables.documentsSpread(spark, dir)
         .filter(col("doc_id") <= corpusCut(spark, dir))
       base.select(col("doc_id"), sha2(col("text"), 256).as("h"))
@@ -692,9 +700,8 @@ object Dedup {
         .write.bucketBy(8, "h")
         .option("path", prefP).mode("overwrite").saveAsTable(prefT)
       baseSets.unpersist()
+      (spark.table(shaT), spark.table(setT), spark.table(prefT))
     }
-    (spark.table(shaT), spark.table(setT), spark.table(prefT))
-  }
 
   /** The cut-annotated signature tables both lifecycle phases share:
     * `shas` = (doc_id, h = sha256(text), c = the 80% id cut) over ALL
@@ -761,10 +768,10 @@ object Dedup {
     */
   private def standingBaseLabels(spark: SparkSession, dir: String,
       split: => (DataFrame, DataFrame, DataFrame),
-      caller: String): DataFrame = this.synchronized {
-    val (baseTable, basePath) =
-      Tables.scopedIndex(spark, "graft_components_base", dir)
-    if (!spark.catalog.tableExists(baseTable)) {
+      caller: String): DataFrame =
+    baseLabelsMemo.getOrBuild(spark, dir, ()) {
+      val (baseTable, basePath) =
+        Tables.scopedIndex(spark, "graft_components_base", dir)
       // `split` is by-name: the persisted in-memory split tables are
       // only constructed on the one-time index build — repeat ingest
       // calls short-circuit to the bucketed table without registering
@@ -774,9 +781,8 @@ object Dedup {
         .repartition(8, col("doc_id"))
         .write.bucketBy(8, "doc_id").sortBy("doc_id")
         .option("path", basePath).mode("overwrite").saveAsTable(baseTable)
+      spark.table(baseTable).select(col("doc_id"), col("comp"))
     }
-    spark.table(baseTable).select(col("doc_id"), col("comp"))
-  }
 
   /** The batch-fold core shared by [[componentsIncremental]] and
     * [[componentsStandingAppend]] (base labels read from the persisted
@@ -902,27 +908,25 @@ object Dedup {
     * in-flight DataFrame.
     */
   def componentsStandingAppend(spark: SparkSession, dir: String): DataFrame =
-    this.synchronized {
+    // fold + compact ONCE per (session, corpus version) — a deployment
+    // compacts each ingest batch into the next index version once;
+    // every later consumer (and every later call here) reads the
+    // compacted version. The registered per-call work is therefore
+    // the post-compaction bucketed read-back — the probe cost — with
+    // the one-time fold paid by the first call (the same
+    // session-scoped standing-state accounting as
+    // standingBaseLabels and the BPE training cache).
+    appendV2Memo.getOrBuild(spark, dir, ()) {
       val (v2Table, v2Path) =
         Tables.scopedIndex(spark, "graft_components_v2", dir)
-      // fold + compact ONCE per (session, corpus) — a deployment
-      // compacts each ingest batch into the next index version once;
-      // every later consumer (and every later call here) reads the
-      // compacted version. The registered per-call work is therefore
-      // the post-compaction bucketed read-back — the probe cost — with
-      // the one-time fold paid by the first call (the same
-      // session-scoped standing-state accounting as
-      // standingBaseLabels and the BPE training cache).
-      if (!spark.catalog.tableExists(v2Table)) {
-        val (shas, sets, prefAll) = splitTables(spark, dir)
-        val folded = foldBatchIntoLabels(shas, sets, prefAll,
-          standingBaseLabels(spark, dir, (shas, sets, prefAll),
-            "componentsStandingAppend(base)"))
-        folded
-          .repartition(8, col("doc_id"))
-          .write.bucketBy(8, "doc_id").sortBy("doc_id")
-          .option("path", v2Path).mode("overwrite").saveAsTable(v2Table)
-      }
+      val (shas, sets, prefAll) = splitTables(spark, dir)
+      val folded = foldBatchIntoLabels(shas, sets, prefAll,
+        standingBaseLabels(spark, dir, (shas, sets, prefAll),
+          "componentsStandingAppend(base)"))
+      folded
+        .repartition(8, col("doc_id"))
+        .write.bucketBy(8, "doc_id").sortBy("doc_id")
+        .option("path", v2Path).mode("overwrite").saveAsTable(v2Table)
       spark.table(v2Table).select(col("doc_id"), col("comp"), col("keep"))
     }
 

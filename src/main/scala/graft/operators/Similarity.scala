@@ -2363,7 +2363,8 @@ object Similarity {
   }
 
   /** In-plan clustered embedding corpus, written once per
-    * (application, dir-scope) under the usual scoped-index contract:
+    * (application, corpus version) at the usual scoped-index path
+    * ([[graft.SessionMemo]]):
     * 2000 vectors, 12 contiguous (shard-grouped) clusters, queries
     * 0–9 drawn from clusters 1–10 (RECALL.json's convention, which
     * AnnCodebookSpec's recall floors replay).
@@ -2374,23 +2375,23 @@ object Similarity {
     * LSH oracle already uses, and floats carry the integers exactly.
     */
   private[graft] def synthClusteredDir(spark: SparkSession, dir: String): String =
-    this.synchronized {
+    synthClusteredMemo.getOrBuild(spark, dir, ()) {
       val (_, path) = Tables.scopedIndex(spark, "graft_synth_clustered", dir)
-      if (!new java.io.File(s"$path/embeddings.parquet/_SUCCESS").exists()) {
-        spark.range(2000)
-          .select(col("id").as("vec_id"),
-            expr("""transform(sequence(0, 63), j -> CAST(
-                CAST(conv(substring(md5(CAST(concat_ws(':', 'ctr',
-                  CAST(CASE WHEN id < 10 THEN id + 1 ELSE id * 12 div 2000 END AS STRING),
-                  CAST(j AS STRING)) AS BINARY)), 1, 7), 16, 10) AS BIGINT) % 2001 - 1000
-                + CAST(conv(substring(md5(CAST(concat_ws(':', 'nz',
-                  CAST(id AS STRING), CAST(j AS STRING)) AS BINARY)), 1, 7), 16, 10) AS BIGINT) % 241 - 120
-              AS FLOAT))""").as("embedding"))
-          .repartition(8)
-          .write.mode("overwrite").parquet(s"$path/embeddings.parquet")
-      }
+      spark.range(2000)
+        .select(col("id").as("vec_id"),
+          expr("""transform(sequence(0, 63), j -> CAST(
+              CAST(conv(substring(md5(CAST(concat_ws(':', 'ctr',
+                CAST(CASE WHEN id < 10 THEN id + 1 ELSE id * 12 div 2000 END AS STRING),
+                CAST(j AS STRING)) AS BINARY)), 1, 7), 16, 10) AS BIGINT) % 2001 - 1000
+              + CAST(conv(substring(md5(CAST(concat_ws(':', 'nz',
+                CAST(id AS STRING), CAST(j AS STRING)) AS BINARY)), 1, 7), 16, 10) AS BIGINT) % 241 - 120
+            AS FLOAT))""").as("embedding"))
+        .repartition(8)
+        .write.mode("overwrite").parquet(s"$path/embeddings.parquet")
       path
     }
+
+  private val synthClusteredMemo = new SessionMemo[Unit, String]
 
   private def annRecallOf(spark: SparkSession, dir: String,
       variants: Seq[(String, DataFrame)]): DataFrame = {

@@ -40,10 +40,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * so the rule cannot fire on its own output even after the optimizer
   * pushes the verify filter back into the blocked join's condition.
   *
-  * Installed via `graft.GraftExtensions`
+  * Installed only via `graft.GraftExtensions`
   * (`injectOptimizerRule` → Catalyst's operator-optimization batch, so
-  * the rebuilt subtree still gets column pruning / pushdown), or
-  * `GraftExtensions.register` on a running session.
+  * the rebuilt subtree still gets column pruning / pushdown).
   */
 object EditDistanceJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 

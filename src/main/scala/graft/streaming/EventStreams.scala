@@ -45,7 +45,6 @@ object EventStreams {
     * TIMESTAMP from a LONG/NTZ column and fail at runtime.)
     */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val rawSchema = Tables.parquet(spark, s"$dir/events.parquet").schema
     Tables.normalizeTs(
       spark.readStream

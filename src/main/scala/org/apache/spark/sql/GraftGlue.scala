@@ -36,14 +36,16 @@ object GraftGlue {
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
-  /** Register a function builder on an ALREADY-RUNNING session (the
-    * config-time path is `spark.sql.extensions=graft.GraftExtensions`).
+  /** A function builder for a typed `Aggregator`, the expression
+    * `spark.udf.register(name, udaf(agg, enc))` would build, for
+    * `SparkSessionExtensions.injectFunction` (`ScalaAggregator` is
+    * internal to Spark SQL, hence surfaced here).
     */
-  def registerRuntimeFunction(
-      spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
+  def aggregator[IN, BUF, OUT](name: String, agg: expressions.Aggregator[IN, BUF, OUT],
+      enc: Encoder[IN]): Seq[Expression] => Expression = {
+    val udaf = expressions.UserDefinedAggregator(agg, enc, Some(name))
+    args => execution.aggregate.ScalaAggregator(udaf, args)
+  }
 
   /** The data schema `spark.read.parquet(path)` would infer, read from
     * one footer on the driver instead of by Spark's one-task inference

@@ -249,6 +249,8 @@ class BucketedJoinSpec extends AnyFunSuite with SparkFixture {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql(s"DROP TABLE IF EXISTS ${Tables.scopedIndex(spark, "graft_components_index", fixtureDir)._1}")
+      // the memo would otherwise hand a later call the dropped table
+      Dedup.componentIndexMemo.clear()
     }
   }
 

@@ -81,31 +81,41 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
       3L -> ((3L, true)), 4L -> ((4L, true))))
   }
 
-  test("incremental components: a batch doc bridges two standing components") {
-    import spark.implicits._
-    val dir = scratchDir("graft-comp-incr")
-    // Base (ids <= cut 8): components {1,2} and {5,6} — exact-dup pairs
-    // whose texts share 70 of 90 union bigrams (j = 0.778 < 0.8, so the
-    // base clustering keeps them separate) — plus singleton 7.
-    // Batch (ids > 8): doc 9 contains BOTH texts' token runs
-    // (j = 80/91 = 0.879 to each side — a bridge that must MERGE the
-    // two standing components, the case probe-only labeling misses),
-    // and doc 10 is an exact dup of base doc 7.
-    val core = (1 to 71).map(i => s"w$i")
-    val aTxt = (core ++ (1 to 10).map(i => s"x$i")).mkString(" ")
-    val bTxt = (core ++ (1 to 10).map(i => s"y$i")).mkString(" ")
-    val bridge = (core ++ (1 to 10).map(i => s"x$i")
-      ++ core ++ (1 to 10).map(i => s"y$i")).mkString(" ")
-    val lone = (1 to 30).map(i => s"z$i").mkString(" ")
-    Seq(1L -> aTxt, 2L -> aTxt, 5L -> bTxt, 6L -> bTxt, 7L -> lone,
-      9L -> bridge, 10L -> lone)
-      .map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  // Base (ids <= cut 8): components {1,2} and {5,6} — exact-dup pairs
+  // whose texts share 70 of 90 union bigrams (j = 0.778 < 0.8, so the
+  // base clustering keeps them separate) — plus singleton 7.
+  // Batch (ids > 8): doc 9 contains BOTH texts' token runs
+  // (j = 80/91 = 0.879 to each side — a bridge that must MERGE the
+  // two standing components, the case probe-only labeling misses),
+  // and doc 10 is an exact dup of base doc 7.
+  private val core = (1 to 71).map(i => s"w$i")
+  private val aTxt = (core ++ (1 to 10).map(i => s"x$i")).mkString(" ")
+  private val bTxt = (core ++ (1 to 10).map(i => s"y$i")).mkString(" ")
+  private val bridge = (core ++ (1 to 10).map(i => s"x$i")
+    ++ core ++ (1 to 10).map(i => s"y$i")).mkString(" ")
+  private val lone = (1 to 30).map(i => s"z$i").mkString(" ")
 
-    def labelMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Long]("comp"), r.getAs[Boolean]("keep")))).toMap
+  private def writeDocs(dir: String, mode: String, docs: Seq[(Long, String)]): Unit = {
+    import spark.implicits._
+    docs.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.mode(mode).parquet(s"$dir/documents.parquet")
+  }
+
+  /** The bridge corpus above in a fresh scratch dir. */
+  private def bridgeCorpus(): String = {
+    val dir = scratchDir("graft-comp-incr")
+    writeDocs(dir, "overwrite", Seq(1L -> aTxt, 2L -> aTxt, 5L -> bTxt, 6L -> bTxt,
+      7L -> lone, 9L -> bridge, 10L -> lone))
+    dir
+  }
+
+  private def labelMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => r.getAs[Long]("doc_id") ->
+      ((r.getAs[Long]("comp"), r.getAs[Boolean]("keep")))).toMap
+
+  test("incremental components: a batch doc bridges two standing components") {
+    val dir = bridgeCorpus()
     val incr = labelMap(Dedup.componentsIncremental(spark, dir))
     assert(incr === Map(
       1L -> ((1L, true)), 2L -> ((1L, false)), 5L -> ((1L, false)),
@@ -120,6 +130,28 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     // already-compacted v2 table (no re-fold) and must return the
     // identical relation — the bench/deployment steady-state path
     assert(labelMap(Dedup.componentsStandingAppend(spark, dir)) === incr)
+  }
+
+  test("an in-place append rebuilds the components-lifecycle standing tables") {
+    val dir = bridgeCorpus()
+    Dedup.componentLabels(spark, dir).collect()
+    Dedup.componentsIncremental(spark, dir).collect()
+    Dedup.componentsStandingAppend(spark, dir).collect()
+    // a dup of base doc 1 and an unrelated doc; the cut moves 8 -> 9,
+    // so the bridge doc 9 moves from the batch into the base
+    writeDocs(dir, "append", Seq(11L -> aTxt,
+      12L -> (1 to 30).map(i => s"v$i").mkString(" ")))
+    // the session contract between queries: a plan-scoped persist over
+    // the old listing would otherwise stand in for the appended scan
+    spark.catalog.clearCache()
+    val scratch = labelMap(Dedup.dedupComponents(spark, dir))
+    assert(scratch === Map(
+      1L -> ((1L, true)), 2L -> ((1L, false)), 5L -> ((1L, false)),
+      6L -> ((1L, false)), 9L -> ((1L, false)), 11L -> ((1L, false)),
+      7L -> ((7L, true)), 10L -> ((7L, false)), 12L -> ((12L, true))))
+    assert(labelMap(Dedup.componentLabels(spark, dir)) === scratch)
+    assert(labelMap(Dedup.componentsIncremental(spark, dir)) === scratch)
+    assert(labelMap(Dedup.componentsStandingAppend(spark, dir)) === scratch)
   }
 
   test("portable md5 minhash+LSH agrees with the exact inverted index") {

@@ -5,9 +5,22 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The native expressions through their SQL surface. */
 class ExtensionsSpec extends AnyFunSuite with SparkFixture {
 
-  test("graft functions are SQL-callable after registration") {
-    GraftExtensions.register(spark)
+  test("the session extension is the only installer of graft functions and rules") {
+    Sql.registerAll(spark, fixtureDir)
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    Sql.query(spark, fixtureDir, "SELECT count(*) FROM documents").collect()
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    // the typed-Aggregator UDAF comes from the extension too
+    val fresh = spark.newSession()
+    val cand = fresh.sql(
+      "SELECT mg_candidates(t) FROM VALUES ('a'), ('b'), ('a') AS v(t)")
+      .collect().head.getSeq[String](0)
+    assert(cand.toSet === Set("a", "b"))
+    val e = intercept[Exception](fresh.sql("SELECT mg_candidates('a', 'b')").collect())
+    assert(e.getMessage.contains("mg_candidates"))
+  }
 
+  test("graft functions are SQL-callable after registration") {
     val sh = spark.sql(
       "SELECT bigram_shingles(array('a','b','c','b','c')) AS sh").collect().head
       .getSeq[String](0)

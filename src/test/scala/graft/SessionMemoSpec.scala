@@ -181,27 +181,21 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
         s"analyzer pass inside every optimization of the query: $offenders")
   }
 
-  /** The `conf.set` calls allowed under src/main/scala, by (file, key).
-    * An operator that sets a session conf changes every later query of
-    * its caller; a per-read or per-write option does not.
-    */
-  private val allowedConfSets: Map[(String, String), String] = {
-    val nanos = "defensive: a nanos-encoded events regeneration scans as LongType " +
-      "instead of failing; every session already carries the same value"
-    Seq("Tables.scala", "EventStreams.scala", "Bench.scala")
-      .map(f => (f, "spark.sql.legacy.parquet.nanosAsLong") -> nanos).toMap
-  }
-
   test("no session conf.set under src/main/scala outside the allow-list") {
-    val confSet = """conf\s*\.set\(\s*(?:"([^"]*)")?"""
-    val offenders = filesMatching(confSet, "", "src/main/scala").flatMap { f =>
-      val p = java.nio.file.Paths.get(f)
-      confSet.r.findAllMatchIn(java.nio.file.Files.readString(p))
-        .map(m => (p.getFileName.toString, Option(m.group(1)).getOrElse("<non-literal key>")))
-        .filterNot(allowedConfSets.contains)
-    }
+    // an operator that sets a session conf changes every later query of
+    // its caller; a per-read or per-write option does not, and session
+    // defaults belong in Bench.builder
+    val offenders = filesMatching("""conf\s*\.set\(""", "", "src/main/scala")
     assert(offenders.isEmpty,
       s"pass a per-read or per-write option instead of setting the session conf: $offenders")
+  }
+
+  test("no hand-rolled standing-state memo under src/main/scala/graft/operators") {
+    val offenders = filesMatching("""catalog\.tableExists\(|this\.synchronized""", "",
+      "src/main/scala/graft/operators")
+    assert(offenders.isEmpty,
+      "memoize standing tables through graft.SessionMemo: an existence check under an " +
+        s"object-wide lock never sees an in-place append of the corpus: $offenders")
   }
 
   /** The case classes under `root` with an `Array[`-typed parameter in
