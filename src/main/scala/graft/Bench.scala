@@ -142,7 +142,7 @@ object Bench {
     // history; this mode measures the same min-of-2 figure cold).
     val streamOnly = args.contains("--stream-only")
     val queryArgs = args.filterNot(_ == "--stream-only")
-    val unknown = queryArgs.filterNot(SparkEntry.queries.contains)
+    val unknown = queryArgs.filterNot(q => Registry.specs.exists(_.name == q))
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
 
     // Single-JVM bench hygiene: a mid-drain sibling JVM (a just-launched
@@ -223,8 +223,8 @@ object Bench {
     // copurchase_pairs 8.7s mid-session vs a stable 1.6s isolated).
     val selected =
       if (streamOnly) Seq.empty
-      else if (queryArgs.isEmpty) SparkEntry.queries.toSeq
-      else SparkEntry.queries.filter { case (k, _) => queryArgs.contains(k) }.toSeq
+      else Registry.specs.filter(s => queryArgs.isEmpty || queryArgs.contains(s.name))
+        .map(s => s.name -> s.build)
     // returns (wall sec, foreign-CPU share of the window, graft rule
     // ms): share = (Δbusy − Δself) / (wall · Hz · cpus) — 0 when /proc
     // is absent

@@ -69,7 +69,7 @@ object PlanAudit {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = Bench.session(Bench.envCpus)
     val names = if (queryArgs.nonEmpty) queryArgs.toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+      else Registry.specs.map(_.name).sorted
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     // written on this thread, read on the listener-bus thread
@@ -85,7 +85,8 @@ object PlanAudit {
 
     names.foreach { name =>
       println(s"\n===================== $name =====================")
-      val fn = SparkEntry.queries(name)
+      val fn = Registry.specs.find(_.name == name)
+        .getOrElse(throw new IllegalArgumentException(s"unknown query '$name'")).build
       fn(spark, sfDir).explain("formatted")
       if (exec) {
         // the cold run pays standing-table builds + codegen; the second

@@ -65,7 +65,7 @@ object Sql {
     * that cost matters.)
     */
   def registerQueryViews(spark: SparkSession, dir: String): Unit =
-    SparkEntry.queries.foreach { case (name, fn) =>
-      fn(spark, dir).createOrReplaceTempView(s"graft_$name")
+    Registry.specs.foreach { spec =>
+      spec.build(spark, dir).createOrReplaceTempView(s"graft_${spec.name}")
     }
 }

@@ -1,6 +1,6 @@
 package graft.cli
 
-import graft.{Bench, SparkEntry}
+import graft.{Bench, Registry}
 
 /** Command-line entrypoint mirroring the reference's per-task jar
   * invocation (reference README.md:96-145 — `hadoop jar
@@ -14,13 +14,14 @@ import graft.{Bench, SparkEntry}
   * }}}
   *
   * The reference task names (TaskA..TaskH, WordCount, Pi) resolve to
-  * their re-expressed queries; any `SparkEntry.queries` key also works
-  * verbatim, so the CLI surface grows with the registry for free. The
-  * default `tsv` format writes tab-separated `part-*` files — the same
-  * shape the reference's `hdfs dfs -cat output/part-r-00000` expects —
-  * and `--format=parquet` writes typed parquet instead. The output
-  * directory is overwritten, automating the reference README's "remove
-  * the output directory before running each job" note.
+  * their re-expressed queries (each spec's `alias`); any registered
+  * query name also works verbatim, so the CLI surface grows with the
+  * registry for free. The default `tsv` format writes tab-separated
+  * `part-*` files — the same shape the reference's `hdfs dfs -cat
+  * output/part-r-00000` expects — and `--format=parquet` writes typed
+  * parquet instead. The output directory is overwritten, automating
+  * the reference README's "remove the output directory before running
+  * each job" note.
   *
   * Input paths differ from the reference by design: the reference
   * passes one CSV path per table because each Hadoop job re-declares
@@ -31,29 +32,15 @@ import graft.{Bench, SparkEntry}
   */
 object TaskRunner {
 
-  /** Reference entrypoint → registered query. TaskB resolves to the
-    * README-advertised top-10 variant (`taskB_counts_join` is its
-    * fully-joined twin).
+  /** A reference task name (its spec's `alias`) or a registered query
+    * name → the registered query.
     */
-  val taskAliases: Map[String, String] = Map(
-    "TaskA"     -> "taskA_filter_project",
-    "TaskB"     -> "taskB_top10",
-    "TaskC"     -> "taskC_group_count",
-    "TaskD"     -> "taskD_indegree_leftjoin",
-    "TaskE"     -> "taskE_count_distinct",
-    "TaskF"     -> "taskF_anti_join",
-    "TaskG"     -> "taskG_inactive",
-    "TaskH"     -> "taskH_above_avg",
-    "WordCount" -> "wordcount",
-    "Pi"        -> "pi_montecarlo")
-
-  def resolve(task: String): Option[String] =
-    taskAliases.get(task).orElse(Some(task).filter(SparkEntry.queries.contains))
+  def resolve(task: String): Option[String] = Registry.resolve(task).map(_.name)
 
   private def usage: String =
     s"""usage: TaskRunner <task> <tableDir> <outputDir> [--format=tsv|parquet]
-       |  <task>: ${taskAliases.keys.toSeq.sorted.mkString(", ")}, or any
-       |  registered query name (${SparkEntry.queries.size} available)""".stripMargin
+       |  <task>: ${Registry.specs.flatMap(_.alias).sorted.mkString(", ")}, or any
+       |  registered query name (${Registry.specs.size} available)""".stripMargin
 
   def main(args: Array[String]): Unit = {
     val (flags, pos) = args.partition(_.startsWith("--"))
@@ -63,13 +50,13 @@ object TaskRunner {
       case f if f.startsWith("--format=") => f.stripPrefix("--format=")
     }.getOrElse("tsv")
     require(format == "tsv" || format == "parquet", usage)
-    val name = resolve(task).getOrElse(
+    val spec = Registry.resolve(task).getOrElse(
       throw new IllegalArgumentException(s"unknown task '$task'\n$usage"))
 
     // under spark-submit the master and sizing come from the launcher
-    val spark = Bench.builder(Bench.envCpus).appName(s"graft-$name").getOrCreate()
+    val spark = Bench.builder(Bench.envCpus).appName(s"graft-${spec.name}").getOrCreate()
 
-    val result = SparkEntry.queries(name)(spark, tableDir)
+    val result = spec.build(spark, tableDir)
     format match {
       case "parquet" => result.write.mode("overwrite").parquet(outDir)
       case _         => graft.sources.Csv.writeKv(result, outDir)

@@ -610,11 +610,10 @@ object Dedup {
     if (cutV < 0L)
       return Seq.empty[(Long, Long, Boolean)].toDF("doc_id", "comp", "keep")
     val (bshaIdx, bsets, bpref) = standingBaseSignatures(spark, dir)
-    // one-time per (session, corpus), shared with the append row; the
-    // by-name split argument means repeat ingest calls never even
-    // construct (or persist-register) the in-memory split tables
-    val baseLabels = standingBaseLabels(spark, dir, splitTables(spark, dir),
-      "componentsIncremental(base)")
+    // one-time per (session, corpus), shared with the append row;
+    // repeat ingest calls never construct (or persist-register) the
+    // in-memory split tables
+    val baseLabels = standingBaseLabels(spark, dir, "componentsIncremental(base)")
     // per-ingest work: shingle ONLY the batch (scan with the pushed
     // doc_id > cut literal), probe the standing signature tables
     val batchDocs = Tables.documentsSpread(spark, dir)
@@ -753,10 +752,13 @@ object Dedup {
     val basePref = prefAll.filter(col("doc_id") <= col("c"))
     val baseNear = jaccardCandVerify(basePref, basePref, sets)
       .select(col("doc_a"), col("doc_b"))
-    propagateMinLabels(
+    val labels = propagateMinLabels(
       baseStar.unionAll(baseNear),
       baseGrpMin.select(col("doc_id"), col("grp_min").as("comp")),
       caller)
+    // the labels are an eager checkpoint: nothing reads baseGrpMin again
+    baseGrpMin.unpersist()
+    labels
   }
 
   /** The standing BASE-label table both lifecycle rows probe: the
@@ -767,20 +769,22 @@ object Dedup {
     * once across the whole components-lifecycle family.
     */
   private def standingBaseLabels(spark: SparkSession, dir: String,
-      split: => (DataFrame, DataFrame, DataFrame),
-      caller: String): DataFrame =
+      caller: String,
+      shared: Option[(DataFrame, DataFrame, DataFrame)] = None): DataFrame =
     baseLabelsMemo.getOrBuild(spark, dir, ()) {
       val (baseTable, basePath) =
         Tables.scopedIndex(spark, "graft_components_base", dir)
-      // `split` is by-name: the persisted in-memory split tables are
-      // only constructed on the one-time index build — repeat ingest
-      // calls short-circuit to the bucketed table without registering
-      // a fresh set of (never-computed) cached relations per call
-      val (shas, sets, prefAll) = split
+      // the persisted in-memory split tables are only constructed on
+      // the one-time index build, and freed after its write unless the
+      // caller shares its own (the append build folds over them next):
+      // left behind, they outlive this memo entry, and a rebuild after
+      // an in-place append was computed from the old rows (DedupSpec)
+      val (shas, sets, prefAll) = shared.getOrElse(splitTables(spark, dir))
       baseComponentLabels(shas, sets, prefAll, caller)
         .repartition(8, col("doc_id"))
         .write.bucketBy(8, "doc_id").sortBy("doc_id")
         .option("path", basePath).mode("overwrite").saveAsTable(baseTable)
+      if (shared.isEmpty) { shas.unpersist(); sets.unpersist() }
       spark.table(baseTable).select(col("doc_id"), col("comp"))
     }
 
@@ -921,12 +925,13 @@ object Dedup {
         Tables.scopedIndex(spark, "graft_components_v2", dir)
       val (shas, sets, prefAll) = splitTables(spark, dir)
       val folded = foldBatchIntoLabels(shas, sets, prefAll,
-        standingBaseLabels(spark, dir, (shas, sets, prefAll),
-          "componentsStandingAppend(base)"))
+        standingBaseLabels(spark, dir, "componentsStandingAppend(base)",
+          Some((shas, sets, prefAll))))
       folded
         .repartition(8, col("doc_id"))
         .write.bucketBy(8, "doc_id").sortBy("doc_id")
         .option("path", v2Path).mode("overwrite").saveAsTable(v2Table)
+      shas.unpersist(); sets.unpersist()
       spark.table(v2Table).select(col("doc_id"), col("comp"), col("keep"))
     }
 

@@ -175,7 +175,8 @@ object Similarity {
   def bitextMine(spark: SparkSession, dir: String, k: Int = 4,
                  threshold: Double = 1.05): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val langs = Tables.documentsSpread(spark, dir)
+    // a plain scan: the lookup does no per-document work to spread
+    val langs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"))
     val emb = withNorm(spark, dir)
       .join(langs, col("vec_id") === col("doc_id"))
@@ -191,15 +192,14 @@ object Similarity {
       // moves to the doc-scale input side where its bytes are trivial
       .repartition(col("lang"), col("tgt_id"))
 
-    // all-pairs exact scores (the baseline's deliberate weakness);
-    // persisted once — both direction windows and the margin join
-    // consume this relation. The English side rides an explicit
-    // broadcast so the planner can never pick a PARTITIONED cartesian
-    // (PlanLint's invariant): the streamed target side scans in place.
+    // all-pairs exact scores (the baseline's deliberate weakness), not
+    // persisted: marginSelect's one linear window chain is their only
+    // consumer. The English side rides an explicit broadcast so the
+    // planner can never pick a PARTITIONED cartesian (PlanLint's
+    // invariant): the streamed target side scans in place.
     val scored = broadcast(src).crossJoin(tgt)
       .withColumn("sim", dot(col("sv"), col("tv")) / (col("snrm") * col("tnrm")))
       .select(col("lang"), col("src_id"), col("tgt_id"), col("sim"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
     marginSelect(scored, k, threshold)
   }
@@ -1778,7 +1778,7 @@ object Similarity {
     * SCALE.json measured going quadratic at 10× under the old
     * hard-coded 16 buckets/band (516k → 51.6M collisions). The SAME
     * integer rule runs in every oracle replay's `params` CTE
-    * (SparkEntry `lshBandCtes`), so derived parameters stay
+    * (OracleSql `lshBandCtes`), so derived parameters stay
     * hash-exact at any SF. Pure integers — no log2 ulp risk.
     *
     * Validity bound: b grows with N up to 45 bits — a 2^45-bucket
@@ -1810,7 +1810,7 @@ object Similarity {
     * O(nBands · 8 · N) = O(N log N) worst case — each band is
     * occupancy-bounded, and the band count grows only with log N.
     * Replayed as the `nb` column of every oracle `params` CTE
-    * (SparkEntry `lshBandCtes`) — same integer rule, hash-exact.
+    * (OracleSql `lshBandCtes`) — same integer rule, hash-exact.
     */
   private[graft] def derivedBandCount(bandBits: Int): Int =
     4 + math.max(0, bandBits - 16)
@@ -1826,7 +1826,7 @@ object Similarity {
     * N = 2^40·8 ≈ 8.8e12 vectors at occupancy ≤ 8·2^20; past that a
     * deployment trains on a sample anyway). Pure integer shifts, so
     * the SAME rule replays as the `nlparams` CTE in every IVF oracle
-    * (SparkEntry `nlistParamsCte`) — derived parameters stay
+    * (OracleSql `nlistParamsCte`) — derived parameters stay
     * hash-exact at any SF. At the registered corpora (500–2000
     * vectors) the rule lands on the floor k = 16, bit-identical to
     * the retired fixed knob; IvfScaleSpec drives planted corpora

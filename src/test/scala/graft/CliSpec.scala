@@ -10,10 +10,9 @@ import graft.cli.TaskRunner
 class CliSpec extends AnyFunSuite with SparkFixture {
 
   test("every reference task alias resolves to a registered query") {
-    TaskRunner.taskAliases.foreach { case (task, query) =>
-      assert(TaskRunner.resolve(task) === Some(query))
-      assert(SparkEntry.queries.contains(query), s"$task -> $query unregistered")
-    }
+    for (spec <- Registry.specs; task <- spec.alias)
+      assert(TaskRunner.resolve(task) === Some(spec.name))
+    assert(Registry.specs.flatMap(_.alias).size === 10)
     // registry names pass through verbatim; junk is rejected
     assert(TaskRunner.resolve("dedup_exact") === Some("dedup_exact"))
     assert(TaskRunner.resolve("TaskZ") === None)

@@ -141,9 +141,6 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     // so the bridge doc 9 moves from the batch into the base
     writeDocs(dir, "append", Seq(11L -> aTxt,
       12L -> (1 to 30).map(i => s"v$i").mkString(" ")))
-    // the session contract between queries: a plan-scoped persist over
-    // the old listing would otherwise stand in for the appended scan
-    spark.catalog.clearCache()
     val scratch = labelMap(Dedup.dedupComponents(spark, dir))
     assert(scratch === Map(
       1L -> ((1L, true)), 2L -> ((1L, false)), 5L -> ((1L, false)),

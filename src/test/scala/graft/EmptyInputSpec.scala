@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * empty-array reducers, and first-batch index builds that assume a
   * non-empty corpus.
   *
-  * `stream_*` queries are excluded: their multi-batch file-source
-  * lifecycle needs at least one input file per micro-batch plan and has
-  * its own dedicated specs.
+  * Streaming queries ([[QuerySpec]] `streaming`) are excluded: their
+  * multi-batch file-source lifecycle needs at least one input file per
+  * micro-batch plan and has its own dedicated specs.
   */
 class EmptyInputSpec extends AnyFunSuite with SparkFixture {
 
@@ -28,17 +28,16 @@ class EmptyInputSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("every batch query tolerates zero-row inputs") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => name.startsWith("stream_") }
-      .flatMap { case (name, fn) =>
+    val failures = Registry.specs.sortBy(_.name).filterNot(_.streaming)
+      .flatMap { spec =>
         try {
-          fn(spark, emptyDir).collect()
+          spec.build(spark, emptyDir).collect()
           spark.catalog.clearCache()
           None
         } catch {
           case e: Throwable =>
             spark.catalog.clearCache()
-            Some(s"$name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}")
+            Some(s"${spec.name}: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}")
         }
       }
     assert(failures.isEmpty,
